@@ -141,10 +141,10 @@ object Explain {
       |
       |## Landmark-bounded s→t search — measured frontier cut (round 10)
       |
-      |`q_weighted_path_pruned` (customer:1 → supplier:3, sf0.1, rounds=4,
-      |GRAFT_WSP_DEBUG=1): the one-row index probe yields ub=18.0. Both
-      |loops instrumented — the same shared `relaxLoop` with and without
-      |the cut, run side by side (true unpruned frontiers, not a
+      |`q_weighted_path_pruned` (customer:1 → supplier:3, sf0.1, rounds=4):
+      |the one-row index probe yields ub=18.0. Both loops instrumented —
+      |the same shared `relaxLoopStatus` with and without the cut, run
+      |side by side (true unpruned frontiers, not a
       |within-pruned-run estimate):
       |
       |    round   pruned    unpruned    cut
@@ -159,7 +159,7 @@ object Explain {
       |corpus-sized, which is where a 100 TB graph pays. The result is
       |bit-equal to q_weighted_path (shared oracle row), and the pruned and
       |plain searches share ONE relaxation-loop implementation
-      |(`PathTraversals.relaxLoop`), so bit-equality is structural, not
+      |(`PathTraversals.relaxLoopStatus`), so bit-equality is structural, not
       |maintained by hand. Symmetric (BOTH) views only — enforced: the
       |one-sided landmark legs don't bound d(s,t) on a directed view.
       |

@@ -2,7 +2,8 @@ package graft.olap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Direction, PropertyGraph}
+import graft.core.{Direction, PropertyGraph, Superstep}
+import graft.core.Superstep.Step
 
 /** OLAP job algorithms (SURVEY §2.13, reference `.../job/algorithm/`) as
   * whole-graph DataFrame programs.
@@ -10,9 +11,8 @@ import graft.core.{Direction, PropertyGraph}
   * The reference delegates big OLAP to an external Pregel system
   * (hugegraph-computer); here every algorithm is an iterative dataflow whose
   * per-iteration work is one join + one aggregation — the shape that scales
-  * linearly with executors. Iterative loops `localCheckpoint` each round:
-  * without it the lineage and optimizer time grow quadratically with
-  * iteration count (the classic iterative-Spark trap).
+  * linearly with executors. Every round loop runs on [[Superstep]], which
+  * owns where its lineage is cut (see there for the policy and why).
   *
   * Edge-DF convention: `(src, dst)`, directed. Undirected algorithms take a
   * canonical `src < dst` edge set and symmetrize internally.
@@ -30,9 +30,6 @@ object Algorithms {
   def countEdge(g: PropertyGraph): DataFrame =
     g.edges.groupBy(col("label")).agg(count(lit(1)).as("n"))
 
-  /** Fixed-iteration PageRank (reference `rank/PageRankAlgorithm.java:67`):
-    * r' = (1-α)/N + α·Σ_{u→v} r(u)/outdeg(u); dangling mass is not
-    * redistributed (matches the reference's per-edge push). */
   /** The pinned, co-partitioned inputs every PageRank round plans against:
     * verts by id, edges (with out-degree riding on the edge row) by src.
     * Exposed so the bench/session warmup can pre-materialize this load-phase
@@ -51,28 +48,22 @@ object Algorithms {
     (verts, edges)
   }
 
+  /** Fixed-iteration PageRank (reference `rank/PageRankAlgorithm.java:67`):
+    * r' = (1-α)/N + α·Σ_{u→v} r(u)/outdeg(u); dangling mass is not
+    * redistributed (matches the reference's per-edge push). */
   def pageRank(g: PropertyGraph, alpha: Double, iterations: Int): DataFrame = {
-    // Co-partition everything on the join keys ONCE: edges by src, verts by
-    // id. localCheckpoint preserves the hash partitioning, so per iteration
-    // only the contribution rows move (groupBy(dst) + re-align to the verts
-    // partitioning — verified 2 hash exchanges in the physical plan); the
-    // EDGE TABLE itself never re-shuffles. That is the difference between
-    // O(iters) and O(1) shuffles of the big table — what decides whether
-    // PageRank rounds are feasible at 100 TB.
+    // Co-partitioned ONCE (edges by src, verts by id) and the cut keeps the
+    // hash partitioning, so per round only the contribution rows move; the
+    // EDGE TABLE never re-shuffles — O(1), not O(iters), shuffles of it.
     val (verts, edges) = pageRankViews(g)
     val n = verts.count().toDouble
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-    for (i <- 0 until iterations) {
-      // vertex-align fused into the contribution aggregation (r16, guide
-      // §2.4 — the msbfsBatch pattern): the per-edge pushes and a zero row
-      // per vertex enter ONE id-keyed groupBy, replacing the former
-      // groupBy + co-partitioned-but-sort-merge left join (two O(|V| log
-      // |V|) sorts per round). Adding 0.0 to an IEEE sum is exact, so rank
-      // values are bit-identical; dangling vertices get their (1-α)/n from
-      // the zero row exactly as from the old coalesce.
-      // __v marks the vertex self row: targets with no vertex row are
-      // dropped exactly as the old left join dropped them
-      ranks = ranks.select(col("id").as("src"), col("rank"))
+    Superstep.run(verts.withColumn("rank", lit(1.0 / n)), iterations) { (ranks, round) =>
+      // vertex-align fused into the contribution aggregation (r16): the
+      // per-edge pushes and a zero row per vertex (__v) enter ONE id-keyed
+      // groupBy instead of groupBy + sort-merge left join. Adding 0.0 to an
+      // IEEE sum is exact, so ranks are bit-identical; targets with no
+      // vertex row are dropped as the old left join dropped them.
+      Step(round.cut(ranks.select(col("id").as("src"), col("rank"))
         .join(edges, Seq("src"))
         .select(col("dst").as("id"), (col("rank") / col("deg")).as("s"),
           lit(0).as("__v"))
@@ -80,51 +71,35 @@ object Algorithms {
         .groupBy(col("id")).agg(sum(col("s")).as("s"), max(col("__v")).as("__v"))
         .filter(col("__v") === 1)
         .select(col("id"),
-          (lit((1.0 - alpha) / n) + lit(alpha) * col("s")).as("rank"))
-        // lazy lineage cut: each round's frame has exactly ONE consumer
-        // (the next round's join), so the eager barrier bought nothing —
-        // the loop runs as one job chain. Every 8th round the cut is EAGER:
-        // an unbounded chain of un-materialized lazy checkpoints nests the
-        // serialized task lineage one level per round, and a 60-iteration
-        // caller overflowed the executor's deserialization stack (GraphXSpec)
-        // — the periodic barrier bounds the depth at a constant.
-        .localCheckpoint(i % 8 == 7)
-    }
-    ranks.select(col("id"), round(col("rank"), 9).as("rank"))
+          (lit((1.0 - alpha) / n) + lit(alpha) * col("s")).as("rank"))))
+    }.state.select(col("id"), round(col("rank"), 9).as("rank"))
   }
 
   /** Converge-or-max-times PageRank (reference
     * `rank/PageRankAlgorithm.java:97-166` with the `precision` parameter:
     * stop when the L1 rank delta Σ_v |Δrank| drops below `precision`, or
-    * after `maxTimes` rounds). Same 2-exchange round as [[pageRank]]; the
-    * previous rank rides on the checkpointed row so the convergence check
-    * is a scan of the checkpoint, not an extra join job per round. */
+    * after `maxTimes` rounds). The previous rank rides on the cut row, so
+    * the convergence check is the round's drain: one 1-row aggregate over
+    * the cut, not an extra join job per round. */
   def pageRankConverged(g: PropertyGraph, alpha: Double, precision: Double,
                         maxTimes: Int): DataFrame = {
     val (verts, edges) = pageRankViews(g)
     val n = verts.count().toDouble
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-    var times = 0
-    var changed = Double.MaxValue
-    while (times < maxTimes && changed >= precision) {
-      // join shape + EAGER cut kept (the r16 union fusion was applied here
-      // and reverted: at tight precision this loop legitimately runs ~100
-      // rounds, and the fused lazy-cut variant blew the executor stack in
-      // GraphXSpec's 1e-10 run — a long-horizon convergence loop wants the
-      // hard per-round barrier; this path backs no bench query)
+    Superstep.run(verts.withColumn("rank", lit(1.0 / n)), maxTimes) { (ranks, round) =>
+      // join shape kept: the r16 union fusion was applied here and
+      // reverted (this path backs no bench query)
       val contrib = ranks.select(col("id").as("src"), col("rank"))
         .join(edges, Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("rank") / col("deg")).as("s"))
-      val next = ranks.select(col("id"), col("rank").as("old"))
+      val next = round.cut(ranks.select(col("id"), col("rank").as("old"))
         .join(contrib, Seq("id"), "left")
         .select(col("id"), col("old"),
-          (lit((1.0 - alpha) / n) + lit(alpha) * coalesce(col("s"), lit(0.0))).as("rank"))
-        .localCheckpoint(true)
-      changed = next.agg(sum(abs(col("rank") - col("old")))).head().getDouble(0)
-      ranks = next.select(col("id"), col("rank"))
-      times += 1
-    }
-    ranks.select(col("id"), round(col("rank"), 9).as("rank"))
+          (lit((1.0 - alpha) / n) + lit(alpha) * coalesce(col("s"), lit(0.0))).as("rank")))
+      // a 1-row drain while the L1 delta is still >= precision
+      Step(next.select(col("id"), col("rank")), drain = Some(
+        next.agg(sum(abs(col("rank") - col("old"))).as("d"))
+          .filter(col("d") >= precision)))
+    }.state.select(col("id"), round(col("rank"), 9).as("rank"))
   }
 
   /** Weakly-connected components: min-id propagation PLUS pointer jumping
@@ -148,8 +123,8 @@ object Algorithms {
     // The gate keeps the collect bounded (≤ gate ids + their edges); the
     // typical consumer is the near-dup PAIR graph (tiny, derived), while a
     // full vertex table blows past the gate and runs the pointer-jumping
-    // rounds. GRAFT_WCC_LOCALMAX=0 disables.
-    val gate = sys.env.get("GRAFT_WCC_LOCALMAX").map(_.toLong).getOrElse(5000L)
+    // rounds.
+    val gate = 5000L
     // type-generic over the id column: the comparison must replicate
     // Spark's min() ordering for the actual type (UTF8 bytes for strings,
     // numeric otherwise); unknown types just stay on the distributed path
@@ -170,7 +145,7 @@ object Algorithms {
           Some((a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int])
         case _ => None
       }
-    if (gate > 0 && lt.isDefined && verts.count() <= gate) {
+    if (lt.isDefined && verts.count() <= gate) {
       val less = lt.get
       val vs: Array[Any] = verts.select(col("id")).collect().map(_.get(0))
       val inVerts = vs.toSet
@@ -214,21 +189,19 @@ object Algorithms {
     val adj = graft.core.Pin.pin(undirectedEdges.select(col("src"), col("dst"))
       .union(undirectedEdges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src")))
-    var comp = verts.select(col("id"), col("id").as("component"))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
+    val done = Superstep.run(verts.select(col("id"), col("id").as("component")),
+        Int.MaxValue) { (comp, round) =>
       val graphContrib = comp.select(col("id").as("src"), col("component"))
         .join(adj, Seq("src"))
         .select(col("dst").as("id"), col("component"))
       // pointer jump fused into the same aggregation: contribute each
-      // vertex's label's label (both sides read the previous round's
-      // eager checkpoint, so no extra materialization). Only from round 3
+      // vertex's label's label (both sides read the previous round's cut,
+      // so no extra materialization). Only from round 3
       // on: short-diameter graphs — the common shape — converge before the
       // jump join would pay for itself, while long-chain graphs still get
       // the O(log diameter) doubling instead of O(diameter) rounds.
       val contribs =
-        if (rounds < 3) graphContrib
+        if (round.index <= 3) graphContrib
         else graphContrib.union(
           comp.select(col("id"), col("component").as("jkey"))
             .join(comp.select(col("id").as("jkey"), col("component")), Seq("jkey"))
@@ -237,10 +210,10 @@ object Algorithms {
       // pattern): neighbor/jump contributions and the self row share ONE
       // id-keyed groupBy — min(component) over the union ≡ the old
       // least(component, coalesce(nbr_min, component)); the previous
-      // component rides the self row (unique per id → max()). Lazy
-      // checkpoint + the convergence count = ONE driver job per round.
+      // component rides the self row (unique per id → max()). The cut +
+      // the convergence drain = ONE driver job per round.
       val compT = comp.schema("component").dataType
-      val next = contribs
+      val next = round.cut(contribs
         .select(col("id"), col("component"), lit(null).cast(compT).as("old"))
         .unionByName(comp.select(col("id"), col("component"),
           col("component").as("old")))
@@ -249,13 +222,11 @@ object Algorithms {
         // old is non-null exactly for ids with a self row — contributions
         // through endpoints with no vertex row are dropped exactly as the
         // old left join dropped them (the union-find tail mirrors this)
-        .filter(col("old").isNotNull)
-        .localCheckpoint(false)
-      changed = next.filter(col("component") =!= col("old")).count()
-      comp = next.select(col("id"), col("component"))
-      rounds += 1
+        .filter(col("old").isNotNull))
+      Step(next.select(col("id"), col("component")),
+        drain = Some(next.filter(col("component") =!= col("old"))))
     }
-    (comp, rounds)
+    (done.state, done.rounds)
   }
 
   /** Canonical undirected edge set (src < dst, distinct). */
@@ -376,19 +347,20 @@ object Algorithms {
     *
     * Scale shape per round: the same two shuffle-joins as the triangle
     * enumeration plus one (src,dst)-keyed count — no windows, no driver
-    * state beyond the loop counter; each round's edge set is lazily
-    * checkpointed (it feeds THREE self-join branches next round). */
+    * state beyond the loop counter; each round's edge set is cut (it feeds
+    * THREE self-join branches next round). */
   def kTruss(canonicalEdges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "k-truss needs k >= 3 and at least one round")
-    var e = graft.core.Pin.pin(canonicalEdges)
-    var out: DataFrame = null
-    for (r <- 1 to rounds) {
+    // state: the previous round's survivors (round 1: the pinned input)
+    Superstep.run(graft.core.Pin.pin(canonicalEdges), rounds) { (prev, round) =>
+      val first = round.index == 1
+      val e = if (first) prev else prev.select(col("src"), col("dst"))
       // corners come back in degree order, so re-canonicalize each side
       // pair to the id order `e` is keyed by. Only round 1 memoizes: its
       // input is the session-pinned view shared with triangle_count /
       // cluster_coefficient; later rounds pass fresh survivor frames whose
       // memo entries could never be re-hit (they'd only pin checkpoints).
-      val tri = triangles(e, memoize = r == 1)
+      val tri = triangles(e, memoize = first)
       val sup = tri.select(explode(array(
           struct(least(col("a"), col("b")).as("src"),
             greatest(col("a"), col("b")).as("dst")),
@@ -398,12 +370,9 @@ object Algorithms {
             greatest(col("b"), col("c")).as("dst")))).as("e"))
         .groupBy(col("e.src").as("src"), col("e.dst").as("dst"))
         .agg(count(lit(1)).as("support"))
-      out = e.join(sup, Seq("src", "dst"), "left")
-        .filter(coalesce(col("support"), lit(0L)) >= k - 2)
-        .localCheckpoint(false)
-      e = out.select(col("src"), col("dst"))
-    }
-    out
+      Step(round.cut(e.join(sup, Seq("src", "dst"), "left")
+        .filter(coalesce(col("support"), lit(0L)) >= k - 2)))
+    }.state
   }
 
   /** k-core: iterative peeling of vertices with degree < k to fixpoint
@@ -416,24 +385,21 @@ object Algorithms {
 
   /** The peeling fixpoint itself — surviving edges of the k-core. */
   private def kcoreEdges(edges0: DataFrame, k: Int): DataFrame = {
-    var edges = edges0
-    var nEdges = edges.count()
-    var done = nEdges == 0
-    while (!done) {
+    val n0 = edges0.count()
+    if (n0 == 0) return edges0
+    Superstep.run(edges0, Int.MaxValue) { (edges, round) =>
       val deg = edges.select(explode(array(col("src"), col("dst"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("id")).localCheckpoint(false)
-      val next = edges
+      val keep = round.cut(deg.filter(col("deg") >= k).select(col("id")))
+      val next = round.cut(edges
         .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        // lazy cuts: the count() materializes both checkpoints in one job
-        .select(col("src"), col("dst")).localCheckpoint(false)
-      val nNext = next.count() // previous round's size is already known
-      done = nNext == nEdges || nNext == 0
-      nEdges = nNext
-      edges = next
-    }
-    edges
+        .select(col("src"), col("dst")))
+      // the drain counts the survivors: a fixpoint once the count stops
+      // falling (the previous round's count is already known)
+      val before = if (round.index == 1) n0 else round.lastCount
+      Step(next, drain = Some(next), done = n => n == before || n == 0)
+    }.state
   }
 
   /** Coreness TIERS — the decomposition view of [[kcore]]: for an ascending
@@ -479,11 +445,8 @@ object Algorithms {
     * (e.g. the influence cascade's live-OUT subgraph) keep the full guard —
     * a directed edge CAN jump back to an arbitrarily early layer.
     *
-    * Barrier shape: the per-layer `count()` is batched to every 2nd layer
-    * (and skipped entirely once an early exit could no longer save ≥2
-    * layers) — a skipped layer's lazy checkpoint materializes inside the
-    * next count (or the final action), so draining one layer early costs
-    * one cheap empty-join round, not a dedicated per-layer driver job.
+    * The emptiness drain runs every 2nd layer: draining one layer late
+    * costs one cheap empty-join round, not a per-layer driver job.
     * Frontier pushdown runs through a stateful
     * [[Traversals.FrontierPruner]] (probe until the first oversize
     * frontier, then never again).
@@ -529,14 +492,11 @@ object Algorithms {
     import spark.implicits._
     val idx = roots.zipWithIndex.map { case (r, i) => (r, i) }.toSeq.toDF("root", "bit")
     val l0 = roots.zipWithIndex.map { case (r, i) => (r, 1L << i) }.toSeq.toDF("id", "mask")
-    var seen = l0
-    var frontier = l0                                 // newly-set bits only
-    var recs = List(l0.withColumn("dist", lit(0L)))
     val pruner = new graft.traverse.Traversals.FrontierPruner
-    var d = 0L
-    var cnt = roots.length.toLong
-    while (cnt > 0 && d < maxDepth) {
-      d += 1
+    // state: (seen, frontier = newly-set bits only, per-layer records)
+    val init = (l0, l0, List(l0.withColumn("dist", lit(0L))))
+    Superstep.run(init, maxDepth) { case ((seen, frontier, recs), round) =>
+      val d = round.index
       // NOT union-fused into one aggregation (tried in r16, reverted):
       // folding the seen rows into the expansion's bit_or groupBy re-
       // SHUFFLES the whole seen table every layer — the union's output
@@ -551,23 +511,20 @@ object Algorithms {
       val exp = frontier.select(col("id").as("src"), col("mask"))
         .join(pruner.prune(adj, frontier), Seq("src"))
         .groupBy(col("dst").as("id")).agg(expr("bit_or(mask)").as("m"))
-      val merged = exp
+      val merged = round.cut(exp
         .join(seen.withColumnRenamed("mask", "old"), Seq("id"), "full")
         .select(col("id"),
           expr("coalesce(m, 0L) & ~coalesce(old, 0L)").as("new"),
-          expr("coalesce(m, 0L) | coalesce(old, 0L)").as("mask"))
-        .localCheckpoint(false)
-      frontier = merged.filter(col("new") =!= 0L)
+          expr("coalesce(m, 0L) | coalesce(old, 0L)").as("mask")))
+      val next = merged.filter(col("new") =!= 0L)
         .select(col("id"), col("new").as("mask"))
-      seen = merged.select(col("id"), col("mask"))
-      // emptiness barrier every 2nd layer, and only while an early exit
+      // emptiness drain every 2nd layer, and only while an early exit
       // could still skip ≥2 remaining layers — a count whose answer can't
-      // save at least its own cost is pure driver-job overhead (the final
-      // layer's cnt is never consumed at all)
-      cnt = if (d % 2 == 0 && d + 2 <= maxDepth) frontier.count() else cnt
-      recs ::= frontier.withColumn("dist", lit(d))
-    }
-    recs.reduce(_ unionByName _)
+      // save at least its own cost is pure driver-job overhead
+      Step((merged.select(col("id"), col("mask")), next,
+          next.withColumn("dist", lit(d.toLong)) :: recs),
+        drain = if (d % 2 == 0 && d + 2 <= maxDepth) Some(next) else None)
+    }.state._3.reduce(_ unionByName _)
       .join(broadcast(idx), expr("(shiftright(mask, bit) & 1) = 1"))
       .select(col("root"), col("id"), col("dist"))
   }
@@ -577,34 +534,28 @@ object Algorithms {
   private[graft] def multiSourceBfsTagged(verts: DataFrame, adj: DataFrame, maxDepth: Int,
                                    symmetric: Boolean): DataFrame = {
     val l0 = verts.select(col("id").as("root"), col("id"), lit(0L).as("dist"))
-    var layers = List(l0)
-    var frontier = l0
-    var guard = l0.select(col("root"), col("id"))    // symmetric: layers d-1 ∪ d
-    var seenIds = guard                              // directed: all layers ≤ d
     val pruner = new graft.traverse.Traversals.FrontierPruner
-    var d = 0L
-    var cnt = verts.count()
-    while (cnt > 0 && d < maxDepth) {
-      d += 1
-      val anti = if (symmetric) guard else seenIds
-      val next = frontier.select(col("root"), col("id").as("src"))
+    // state: (layers, frontier, anti-join guard — symmetric: layers d-1 ∪ d,
+    // directed: all layers ≤ d)
+    val init = (List(l0), l0, l0.select(col("root"), col("id")))
+    Superstep.run(init, maxDepth) { case ((layers, frontier, anti), round) =>
+      val d = round.index
+      val next = round.cut(frontier.select(col("root"), col("id").as("src"))
         .join(pruner.prune(adj, frontier), Seq("src"))
         // distinct on (root, id) hash-partitions on the anti-join's exact
         // keys — the left side enters the anti-join with no extra Exchange
         .select(col("root"), col("dst").as("id")).distinct()
         .join(anti, Seq("root", "id"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint(false)
-      // emptiness barrier every 2nd layer: the count materializes this
-      // layer AND the previous skipped one in a single driver job
-      cnt = if (d % 2 == 0 || d >= maxDepth) next.count() else cnt
+        .withColumn("dist", lit(d.toLong)))
       val nextIds = next.select(col("root"), col("id"))
-      if (symmetric) guard = frontier.select(col("root"), col("id")).unionByName(nextIds)
-      else seenIds = seenIds.unionByName(nextIds)
-      layers ::= next
-      frontier = next
-    }
-    layers.reduce(_ unionByName _)
+      val guard =
+        if (symmetric) frontier.select(col("root"), col("id")).unionByName(nextIds)
+        else anti.unionByName(nextIds)
+      // emptiness drain every 2nd layer: the count materializes this layer
+      // AND the previous undrained one in a single driver job
+      Step((next :: layers, next, guard),
+        drain = if (d % 2 == 0 || d >= maxDepth) Some(next) else None)
+    }.state._1.reduce(_ unionByName _)
   }
 
   /** Sampled eccentricity (max BFS distance within `maxDepth`) per source —
@@ -810,18 +761,18 @@ object Algorithms {
     // pinned co-partitioned on id: the per-round left join against the
     // id-hashed sums must not re-scan/re-shuffle the vertex source per round
     val v = graft.core.Pin.pin(verts.select(col("id")).repartition(col("id")))
-    var x = v.select(col("id"), lit(1.0).as("x"))
-    for (_ <- 0 until iterations) {
+    val x = Superstep.run(v.select(col("id"), lit(1.0).as("x")), iterations,
+        cutEach = false) { (x, round) =>
       // vertex-align fused into the sum (the pageRank r16 pattern): one
       // id-keyed exchange per round, no sort-merge align join. Adding the
       // 0.0 self row is exact (pre-normalization values are integers).
-      x = x.select(col("id").as("src"), col("x"))
+      Step(round.cut(x.select(col("id").as("src"), col("x"))
         .join(adj, Seq("src"))
         .select(col("dst").as("id"), col("x"), lit(0).as("__v"))
         .unionByName(v.withColumn("x", lit(0.0)).withColumn("__v", lit(1)))
         .groupBy(col("id")).agg(sum(col("x")).as("x"), max(col("__v")).as("__v"))
-        .filter(col("__v") === 1).select(col("id"), col("x"))
-    }
+        .filter(col("__v") === 1).select(col("id"), col("x"))))
+    }.state
     // materialize the chain once; the norm agg and the final projection
     // both read this buffer instead of re-running the iteration DAG
     val xm = x.localCheckpoint(true)
@@ -843,9 +794,9 @@ object Algorithms {
   def hits(verts: DataFrame, directedAdj: DataFrame, iterations: Int): DataFrame = {
     val adj = directedAdj.select(col("src"), col("dst"))
     val v = graft.core.Pin.pin(verts.select(col("id")).repartition(col("id")))
-    var hub = v.select(col("id"), lit(1.0).as("h"))
-    var auth = v.select(col("id"), lit(0.0).as("a"))
-    for (_ <- 1 to iterations) {
+    val init = (v.select(col("id"), lit(1.0).as("h")), v.select(col("id"), lit(0.0).as("a")))
+    val (hub, auth) = Superstep.run(init, iterations, cutEach = false) {
+        case ((hub, _), round) =>
       // NOT union-fused (r16): hits interleaves TWO frames through four
       // align points per round pair — fusing them (the pageRank pattern)
       // measured 3.0/0.66 s → 14.5/14.5 s, 11 → 38 jobs at sf0.1: each
@@ -854,13 +805,13 @@ object Algorithms {
       // The aggregated sums are small, so the align joins broadcast.
       val aSum = adj.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("h")).as("s"))
-      auth = v.join(aSum, Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0.0)).as("a"))
+      val auth = round.cut(v.join(aSum, Seq("id"), "left")
+        .select(col("id"), coalesce(col("s"), lit(0.0)).as("a")))
       val hSum = adj.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(sum(col("a")).as("s"))
-      hub = v.join(hSum, Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0.0)).as("h"))
-    }
+      Step((round.cut(v.join(hSum, Seq("id"), "left")
+        .select(col("id"), coalesce(col("s"), lit(0.0)).as("h"))), auth))
+    }.state
     val norms = hub.agg(sum(col("h")).as("hn"))
       .crossJoin(auth.agg(sum(col("a")).as("an")))
     hub.join(auth, Seq("id")).crossJoin(broadcast(norms))
@@ -878,8 +829,7 @@ object Algorithms {
     // vertex set against an id-hashed aggregate — without the pin the source
     // table re-scans AND re-shuffles per round (PlanAudit loop-reshuffle)
     val v = graft.core.Pin.pin(verts.select(col("id")).repartition(col("id")))
-    var labels = v.select(col("id"), col("id").as("lbl"))
-    for (_ <- 0 until iterations) {
+    Superstep.run(v.select(col("id"), col("id").as("lbl")), iterations) { (labels, round) =>
       // deterministic majority: highest count, then lexicographically
       // smallest label. mode(lbl, deterministic=true) IS that contract
       // (ties → lowest value) and it is a hash-map TypedImperativeAggregate
@@ -891,7 +841,7 @@ object Algorithms {
       // self row per vertex keeps isolated vertices present, mode() ignores
       // nulls, and the fallback-to-own-id coalesce is unchanged — one
       // exchange per round total
-      labels = labels.select(col("id").as("src"), col("lbl"))
+      Step(round.cut(labels.select(col("id").as("src"), col("lbl"))
         .join(adj, Seq("src"))
         .select(col("dst").as("id"), col("lbl"), lit(0).as("__v"))
         .unionByName(v.withColumn("lbl",
@@ -901,11 +851,8 @@ object Algorithms {
         .agg(mode(col("lbl"), deterministic = true).as("nbr_lbl"),
           max(col("__v")).as("__v"))
         .filter(col("__v") === 1)
-        .select(col("id"), coalesce(col("nbr_lbl"), col("id")).as("lbl"))
-        // lazy cut — single consumer per round, same as pageRank above
-        .localCheckpoint(false)
-    }
-    labels
+        .select(col("id"), coalesce(col("nbr_lbl"), col("id")).as("lbl"))))
+    }.state
   }
 
   /** SEEDED label spreading — the semi-supervised sibling of [[lpa]] (Zhu &
@@ -918,7 +865,7 @@ object Algorithms {
     *
     * Scale shape: identical to [[lpa]] — per round one join against the
     * pinned symmetrized adjacency + one (id, lbl) aggregation; the vertex
-    * frame is pinned co-partitioned on id, each round's result cut lazily. */
+    * frame is pinned co-partitioned on id, each round's result is cut. */
   def seededLpa(verts: DataFrame, symEdges: DataFrame, seeds: DataFrame,
                 iterations: Int): DataFrame = {
     // `symEdges` = the symmetrized view; callers pass the SESSION-PINNED
@@ -930,9 +877,9 @@ object Algorithms {
     val sd = seeds.select(col("id"), col("lbl").as("__seed")).localCheckpoint(true)
     // the clamp column rides the labels frame — one seed join at init
     // instead of one per round
-    var labels = v.join(sd, Seq("id"), "left")
+    val init = v.join(sd, Seq("id"), "left")
       .select(col("id"), col("__seed").as("lbl"), col("__seed"))
-    for (_ <- 0 until iterations) {
+    Superstep.run(init, iterations) { (labels, round) =>
       // majority vote fused into ONE id-keyed aggregation per round —
       // mode(lbl, deterministic=true) = (count desc, lbl asc), identical
       // tie-break to the former count + argmin-struct pair (see [[lpa]]).
@@ -945,12 +892,10 @@ object Algorithms {
         .join(adj, Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(mode(col("lbl"), deterministic = true).as("vote"))
-      labels = labels.join(pick, Seq("id"), "left")
+      Step(round.cut(labels.join(pick, Seq("id"), "left")
         .select(col("id"),
-          coalesce(col("__seed"), col("vote"), col("lbl")).as("lbl"), col("__seed"))
-        .localCheckpoint(false)
-    }
-    labels.filter(col("lbl").isNotNull).select(col("id"), col("lbl"))
+          coalesce(col("__seed"), col("vote"), col("lbl")).as("lbl"), col("__seed"))))
+    }.state.filter(col("lbl").isNotNull).select(col("id"), col("lbl"))
   }
 
   /** Degree assortativity coefficient (Newman 2002, "Assortative mixing in

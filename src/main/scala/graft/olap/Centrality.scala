@@ -2,6 +2,8 @@ package graft.olap
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Superstep
+import graft.core.Superstep.Step
 
 /** Betweenness / stress centrality via a DataFrame Brandes sweep
   * (reference `cent/BetweennessCentralityAlgorithmV2.java:47`,
@@ -17,32 +19,31 @@ import org.apache.spark.sql.functions._
   */
 object Centrality {
 
-  /** (root, id, dist, sigma): BFS layers with path counting. */
+  /** (root, id, dist, sigma): BFS layers with path counting. The graph is
+    * undirected, so a neighbor of a depth-d vertex has depth d-1, d or d+1:
+    * first visits are decided against layers d-1 ∪ d alone (the
+    * [[Algorithms.multiSourceBfsAdj]] two-layer guard), not against every
+    * layer so far. */
   def bfsWithSigma(roots: DataFrame, undirectedEdges: DataFrame, maxDepth: Int): DataFrame = {
     val adj = graft.core.Pin.pin(undirectedEdges.select(col("src"), col("dst"))
       .union(undirectedEdges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    var seen = roots.select(col("id").as("root"), col("id"),
+    val l0 = roots.select(col("id").as("root"), col("id"),
       lit(0L).as("dist"), lit(1L).as("sigma")).localCheckpoint(true)
-    var frontier = seen
-    var d = 0L
-    var cnt = 1L
-    while (cnt > 0 && d < maxDepth) {
-      d += 1
-      val expanded = frontier.select(col("root"), col("id").as("src"), col("sigma"))
+    // state: (layers, layer d-1, layer d); each layer's count drains the loop
+    Superstep.run((List(l0), l0, l0), maxDepth) { case ((layers, prev, frontier), round) =>
+      val guard = prev.select(col("root"), col("id"))
+        .union(frontier.select(col("root"), col("id")))
+      val expanded = round.cut(frontier.select(col("root"), col("id").as("src"), col("sigma"))
         .join(adj, Seq("src"))
         .select(col("root"), col("dst").as("id"), col("sigma"))
-        .join(seen.select(col("root"), col("id")), Seq("root", "id"), "left_anti")
+        .join(guard, Seq("root", "id"), "left_anti")
         .groupBy(col("root"), col("id"))
         .agg(sum(col("sigma")).as("sigma"))
-        .withColumn("dist", lit(d))
-        .select(col("root"), col("id"), col("dist"), col("sigma"))
-        .localCheckpoint(true)
-      cnt = expanded.count()
-      frontier = expanded
-      seen = seen.union(expanded)
-    }
-    seen
+        .withColumn("dist", lit(round.index.toLong))
+        .select(col("root"), col("id"), col("dist"), col("sigma")))
+      Step((expanded :: layers, frontier, expanded), drain = Some(expanded))
+    }.state._1.reduce(_ union _)
   }
 
   /** Brandes dependency accumulation. Returns (id, betweenness, stress) for
@@ -62,10 +63,10 @@ object Centrality {
     //  P(v)     += P(w) + 1                          — # shortest v→t paths
     // Stress(v) = Σ_roots sigma(root,v)·P(root,v): σ_st(v) = σ_sv·σ_vt and
     // Σ_t σ_vt in the BFS DAG is exactly P(v).
-    var delta = layers.select(col("root"), col("id"), lit(0.0).as("delta"),
+    val delta0 = layers.select(col("root"), col("id"), lit(0.0).as("delta"),
       lit(0L).as("pbelow"))
-    var dd = maxDist
-    while (dd > 0) {
+    val delta = Superstep.run(delta0, maxDist.toInt) { (delta, round) =>
+      val dd = maxDist - round.index + 1
       val wLayer = layers.filter(col("dist") === dd)
         .join(delta.select(col("root"), col("id"), col("delta"), col("pbelow")),
           Seq("root", "id"))
@@ -82,13 +83,11 @@ object Centrality {
           sum(col("sigma_v").cast("double") / col("sigma_w") *
             (lit(1.0) + col("delta_w"))).as("dinc"),
           sum(col("p_w") + 1L).as("pinc"))
-      delta = delta.join(contrib, Seq("root", "id"), "left")
+      Step(round.cut(delta.join(contrib, Seq("root", "id"), "left")
         .select(col("root"), col("id"),
           (col("delta") + coalesce(col("dinc"), lit(0.0))).as("delta"),
-          (col("pbelow") + coalesce(col("pinc"), lit(0L))).as("pbelow"))
-        .localCheckpoint(true)
-      dd -= 1
-    }
+          (col("pbelow") + coalesce(col("pinc"), lit(0L))).as("pbelow"))))
+    }.state
     delta.filter(col("id") =!= col("root"))
       .join(layers.select(col("root"), col("id"), col("sigma")), Seq("root", "id"))
       .groupBy(col("id"))

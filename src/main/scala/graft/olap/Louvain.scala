@@ -104,8 +104,7 @@ object Louvain {
 
   /** Gate for the in-memory tail; 0 disables (spec uses that to diff the
     * two paths). 50k vertices ≈ a few MB of ids — far inside one task. */
-  private[graft] def defaultInMemoryMaxVerts: Long =
-    sys.env.get("GRAFT_LOUVAIN_LOCALMAX").map(_.toLong).getOrElse(50000L)
+  private[graft] val defaultInMemoryMaxVerts = 50000L
 
   /** Spark StringType `<` is UTF8String binary order — unsigned byte
     * compare, NOT String.compareTo (differs beyond ASCII). */
@@ -244,8 +243,7 @@ object Louvain {
     // 32.7s -> 19.1s). Activate only where saved work can exceed overhead.
     val deltaMinVerts = 5000L
     val nVerts0 = verts.count()
-    val noDelta = sys.env.get("GRAFT_LOUVAIN_NODELTA").contains("1") ||
-      nVerts0 < deltaMinVerts
+    val noDelta = nVerts0 < deltaMinVerts
     val nVerts = if (noDelta) 0L else nVerts0
 
     // Delta bookkeeping — bit-exact pruning. A vertex's round-r decision is

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
+import graft.core.Superstep.Step
 
 /** Path-producing traversers (SURVEY §2.12): allShortestPaths, rays, rings,
   * template/customized paths, collection paths, multi-node shortest path,
@@ -593,14 +594,13 @@ object PathTraversals {
     // co-partitioned by src once (the pageRank shape): rounds join on src,
     // so only the small dist side ever moves — the edge table never
     // re-shuffles across rounds
-    relaxLoop(weightedEdgeView(g, dir, labels, weightCol), source, rounds,
-        cut = None, tag = "sssp")
-      .select(col("id"), round(col("dist"), 6).as("dist"))
+    relaxLoopStatus(weightedEdgeView(g, dir, labels, weightCol), source, rounds, cut = None)
+      ._1.select(col("id"), round(col("dist"), 6).as("dist"))
 
   /** The ONE bounded delta-relaxation loop — shared verbatim by
-    * [[weightedSssp]] (cut = None) and [[weightedPathPruned]] (cut = the
-    * landmark bound), so the pruned search stays bit-identical to the
-    * plain one by construction, not by parallel maintenance. Per round:
+    * [[weightedSssp]], [[weightedSsspConverged]] (cut = None) and
+    * [[weightedPathPruned]] (cut = the landmark bound), so the pruned
+    * search stays bit-identical to the plain one by construction. Per round:
     * only vertices whose distance IMPROVED last round (and, with a cut,
     * sit within the bound) relax their edges — an unimproved vertex
     * already contributed the identical dist(u)+w candidates to an earlier
@@ -609,93 +609,52 @@ object PathTraversals {
     * under a cut to paths whose prefixes stay within the bound), while the
     * per-round join shrinks from |reached| to |frontier|. An empty delta
     * frontier means every later round is a no-op — the bounded result is
-    * already final (one cheap scan of the round's checkpoint vs. a wasted
-    * relaxation round). Returns the UNROUNDED (id, dist) table. */
-  private def relaxLoop(edges: DataFrame, source: String, rounds: Int,
-                        cut: Option[Double], tag: String): DataFrame =
-    relaxLoopStatus(edges, source, rounds, cut, tag)._1
-
-  /** [[relaxLoop]] plus a CONVERGED flag (frontier emptied before the round
-    * budget ran out). Callers that prune on an upper bound need it: the
+    * already final (one cheap scan of the round's cut vs. a wasted
+    * relaxation round). Returns the UNROUNDED (id, dist) table and a
+    * CONVERGED flag (frontier emptied before the round budget ran out).
+    * Callers that prune on an upper bound need the flag: the
     * bit-equality argument (pruned == bounded-unpruned at the target) only
     * holds at fixpoint — a non-converged bounded search can legitimately
     * settle the target via a ≤rounds-hop path whose prefix exceeds the
     * landmark bound, which the cut would have dropped. */
   private def relaxLoopStatus(edges: DataFrame, source: String, rounds: Int,
-                              cut: Option[Double], tag: String): (DataFrame, Boolean) = {
+                              cut: Option[Double]): (DataFrame, Boolean) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = Seq((source, 0.0)).toDF("id", "dist")
-    var changed = dist
-    var converged = false
-    for (r <- 1 to rounds if !converged) {
+    val d0 = Seq((source, 0.0)).toDF("id", "dist")
+    // state: (dist, changed); the frontier count drains the loop
+    val done = Superstep.run((d0, d0), rounds) { case ((dist, changed), round) =>
       // settled-merge fused into the candidate min-aggregation (r16, the
-      // [[weightedSsspConverged]] / pageRank union pattern): raw dist+w
-      // candidates and the previous distances (riding a self row, unique
-      // per id → max(old)) share ONE id-keyed exchange — the former
-      // per-round groupBy + full-outer sort-merge join paid a second
-      // exchange plus two O(|reached| log) sorts. min() is
-      // order-insensitive, so distances stay bit-identical.
-      // min(dist) over the union ≡ least(coalesce(old,rdist),
-      // coalesce(rdist,old)); improved ≡ old is null or the min beat it.
-      val merged = changed.select(col("id").as("src"), col("dist"))
+      // pageRank union pattern): dist+w candidates and the previous
+      // distances (a self row, unique per id → max(old)) share ONE id-keyed
+      // exchange instead of groupBy + full-outer sort-merge join. min() is
+      // order-insensitive, so distances stay bit-identical; improved ≡ old
+      // is null or the min beat it.
+      val merged = round.cut(changed.select(col("id").as("src"), col("dist"))
         .join(edges, Seq("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"),
           lit(null).cast("double").as("old"))
         .unionByName(dist.select(col("id"), col("dist"), col("dist").as("old")))
         .groupBy(col("id")).agg(min(col("dist")).as("dist"), max(col("old")).as("old"))
         .select(col("id"), col("dist"),
-          (col("old").isNull || col("dist") < col("old")).as("improved"))
-        // lazy cut: the frontier count below materializes it — one driver
-        // job per round where the eager checkpoint + limit(1) probe paid two
-        .localCheckpoint(false)
+          (col("old").isNull || col("dist") < col("old")).as("improved")))
       val improved = merged.filter(col("improved"))
-      changed = cut.fold(improved)(c => improved.filter(col("dist") <= c))
+      val frontier = cut.fold(improved)(c => improved.filter(col("dist") <= c))
         .select(col("id"), col("dist"))
-      val frontierN = changed.count()
-      if (wspDebug) System.err.println(
-        s"[wsp:$tag] round=$r frontier=$frontierN")
-      converged = frontierN == 0
-      dist = merged.select(col("id"), col("dist"))
+      Step((merged.select(col("id"), col("dist")), frontier), drain = Some(frontier))
     }
-    (dist, converged)
+    (done.state._1, done.drained)
   }
 
   /** Weighted SSSP relaxed to FIXPOINT — the reference's Dijkstra semantics
-    * (`SingleSourceShortestPathTraverser:49`) without a round bound. Each
-    * round relaxes every edge once (distributed Bellman-Ford); terminates
-    * when no distance improves, ≤ |V|-1 rounds on non-negative weights.
-    * `maxRounds` is a runaway guard, not a semantic bound. */
+    * (`SingleSourceShortestPathTraverser:49`) without a round bound: the
+    * bounded delta relaxation, which stops as soon as no distance improves
+    * (≤ |V|-1 rounds on non-negative weights). `maxRounds` is a runaway
+    * guard, not a semantic bound. */
   def weightedSsspConverged(g: PropertyGraph, source: String, dir: Direction.Value,
                             labels: Seq[String], weightCol: String,
-                            maxRounds: Int = 100): DataFrame = {
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val edges = pinned(EdgeStep(dir, labels).edgesFor(g)
-      .select(col("src"), col("dst"),
-        coalesce(col(weightCol).cast("double"), lit(1.0)).as("w"))
-      .repartition(col("src")))
-    var dist = Seq((source, 0.0)).toDF("id", "dist").localCheckpoint(true)
-    var changed = 1L
-    var r = 0
-    while (changed > 0 && r < maxRounds) {
-      r += 1
-      val relaxed = dist.select(col("id").as("src"), col("dist"))
-        .join(edges, Seq("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"),
-          lit(null).cast("double").as("old"))
-      // carry the previous distance through the aggregation so convergence
-      // is a scan of this round's checkpoint, not an extra join job
-      val next = dist
-        .select(col("id"), col("dist"), col("dist").as("old"))
-        .unionByName(relaxed)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"), max(col("old")).as("old"))
-        .localCheckpoint(true)
-      changed = next.filter(col("old").isNull || col("dist") < col("old")).count()
-      dist = next.select(col("id"), col("dist"))
-    }
-    dist.select(col("id"), round(col("dist"), 6).as("dist"))
-  }
+                            maxRounds: Int = 100): DataFrame =
+    weightedSsspCompute(g, source, dir, labels, weightCol, maxRounds)
 
   /** Probe-then-verify weighted s→t distance: the warmup-built weighted
     * landmark index ([[graft.olap.Algorithms.weightedLandmarkIndex]])
@@ -715,10 +674,6 @@ object PathTraversals {
     * The 1-row `collect` is a gated driver-side probe (the FrontierPruner
     * discipline): the bound must reach the driver to parameterize the
     * loop's filter literal. */
-  /** GRAFT_WSP_DEBUG=1: print per-round pruned vs unpruned frontier sizes
-    * (dev-only counts; off in benchmarks). */
-  private lazy val wspDebug = sys.env.get("GRAFT_WSP_DEBUG").contains("1")
-
   def weightedPathPruned(g: PropertyGraph, source: String, target: String,
                          dir: Direction.Value, labels: Seq[String],
                          weightCol: String, rounds: Int,
@@ -750,7 +705,7 @@ object PathTraversals {
         // sequence, so pruned == bounded-unpruned bit-for-bit. Non-converged
         // → fall back to the unpruned (memoized) search.
         val (pruned, converged) = relaxLoopStatus(edges, source, rounds,
-          cut = Some(bound + 1e-5), tag = "pruned")
+          cut = Some(bound + 1e-5))
         if (converged)
           pruned.filter(col("id") === target)
             .select(round(col("dist"), 6).as("dist"))
