@@ -524,7 +524,8 @@ object Explain {
     sb ++= "test`): unpartitioned Window sort, non-broadcast cartesian, same source\n"
     sb ++= "table shuffled in ≥3 executions of one query (= re-shuffled inside an\n"
     sb ++= "iterative loop body). `exch` = shuffle exchanges in the final plan;\n"
-    sb ++= "`execs` = captured executions (iterative queries materialize per round).\n\n"
+    sb ++= "`execs` = captured executions (iterative queries materialize per round).\n"
+    sb ++= "A traverser answered from the driver index (`LocalAdjacency`, built when a view of ≤ 2M rows is pinned) plans as one local relation: 0 exch.\n\n"
     sb ++= s"**Red flags: ${sweepFlags.size}**"
     sb ++= (if (sweepFlags.isEmpty) " — clean.\n\n" else "\n\n" + sweepFlags.map(a =>
       s"- ${a.name}: ${a.flags.mkString(", ")}").mkString("\n") + "\n\n")

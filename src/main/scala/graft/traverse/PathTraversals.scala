@@ -22,13 +22,62 @@ object PathTraversals {
     sources.map(s => (s, Seq(s))).toDF("id", "path")
   }
 
+  /** Paths answered on the driver, as the local relation `(path
+    * array<string>)` under the same '->'-joined projection as the Spark
+    * loops. */
+  private def localPaths(g: PropertyGraph, paths: Seq[Seq[String]]): DataFrame = {
+    val spark = g.vertices.sparkSession
+    import spark.implicits._
+    paths.toDF("path").select(pathCol.as("path"))
+  }
+
   /** All shortest (simple, vertex-distinct) paths source→target within
     * maxDepth (reference `ShortestPathTraverser.allShortestPaths:104`):
     * enumerate simple paths breadth-first, stop at the first depth where the
-    * target appears, return every path of that depth. */
+    * target appears, return every path of that depth. On the driver index:
+    * BFS to that depth, recording every parent one layer up, then walk the
+    * parents back from the target — a walk of shortest length is simple. */
   def allShortestPaths(g: PropertyGraph, source: String, target: String,
                        dir: Direction.Value, labels: Seq[String] = Nil,
-                       maxDepth: Int): DataFrame = {
+                       maxDepth: Int): DataFrame =
+    LocalAdjacency.of(Traversals.adjacencyView(g, dir, labels)) match {
+      case Some(ix) => localPaths(g, shortestPathsLocal(ix, source, target, maxDepth))
+      case None => allShortestPathsJoin(g, source, target, dir, labels, maxDepth)
+    }
+
+  private def shortestPathsLocal(ix: LocalAdjacency, source: String, target: String,
+                                 maxDepth: Int): Seq[Seq[String]] = {
+    val s = ix.idOf(source)
+    val t = ix.idOf(target)
+    // a simple path never returns to its source
+    if (s < 0 || t < 0 || s == t) return Nil
+    val dist = Array.fill(ix.vertexCount)(-1)
+    val parents = new java.util.HashMap[Int, List[Int]]()
+    dist(s) = 0
+    var frontier = Array(s)
+    var d = 0
+    while (dist(t) < 0 && d < maxDepth && frontier.nonEmpty) {
+      d += 1
+      val next = Array.newBuilder[Int]
+      for (u <- frontier; e <- ix.from(u) until ix.until(u)) {
+        val v = ix.nbr(e)
+        if (dist(v) < 0) { dist(v) = d; next += v; parents.put(v, u :: Nil) }
+        else if (dist(v) == d) parents.put(v, u :: parents.get(v))
+      }
+      frontier = next.result()
+    }
+    val out = Seq.newBuilder[Seq[String]]
+    def back(v: Int, suffix: List[String]): Unit =
+      if (v == s) out += source :: suffix
+      else parents.get(v).foreach(u => back(u, ix.name(v) :: suffix))
+    if (dist(t) >= 0) back(t, Nil)
+    out.result()
+  }
+
+  /** [[allShortestPaths]]'s Spark-join loop. */
+  private[graft] def allShortestPathsJoin(g: PropertyGraph, source: String, target: String,
+                                          dir: Direction.Value, labels: Seq[String],
+                                          maxDepth: Int): DataFrame = {
     // distinct edge view, pinned once and shared across queries: with a
     // distinct seed, extended paths (path ++ [dst]) stay distinct by
     // construction, so NO per-hop distinct shuffle of the path frontier
@@ -344,9 +393,51 @@ object PathTraversals {
     * (reference `SubGraphTraverser.java:250-268`: target == parent closes a
     * ring iff direction != BOTH or hasMultiEdges). A deeper closure can
     * never revisit the source mid-path, so the parent==target rule reduces
-    * to the path-length-2 case. */
+    * to the path-length-2 case; a 1-hop self-loop never counts in BOTH
+    * mode. On the driver index: a DFS over simple paths, the parallel-edge
+    * test reading the multiplicity view's index. */
   def rings(g: PropertyGraph, source: String, dir: Direction.Value,
             labels: Seq[String] = Nil, maxDepth: Int): DataFrame = {
+    val local = LocalAdjacency.of(Traversals.adjacencyView(g, dir, labels)).flatMap { ix =>
+      if (dir != Direction.BOTH) Some(ringsLocal(ix, None, source, maxDepth))
+      else LocalAdjacency.of(Traversals.multiplicityView(g, EdgeStep(dir, labels)))
+        .map(m => ringsLocal(ix, Some(m), source, maxDepth))
+    }
+    local.map(localPaths(g, _)).getOrElse(ringsJoin(g, source, dir, labels, maxDepth))
+  }
+
+  /** `multi`: the multiplicity index of a BOTH walk, else None. */
+  private def ringsLocal(ix: LocalAdjacency, multi: Option[LocalAdjacency],
+                         source: String, maxDepth: Int): Seq[Seq[String]] = {
+    val s = ix.idOf(source)
+    if (s < 0 || maxDepth < 1) return Nil
+    val out = Seq.newBuilder[Seq[String]]
+    val path = new Array[Int](maxDepth)
+    val onPath = new java.util.BitSet(ix.vertexCount)
+    // path(0 until k) is a simple path from the source; its edges are hop k
+    def walk(k: Int): Unit = {
+      val v = path(k - 1)
+      for (e <- ix.from(v) until ix.until(v)) {
+        val w = ix.nbr(e)
+        if (w == s) {
+          val closes = multi.forall(m =>
+            k > 2 || k == 2 && m.multiplicity(ix.name(v), source) >= 2)
+          if (closes) out += (path.take(k) :+ s).toSeq.map(ix.name)
+        } else if (k < maxDepth && !onPath.get(w)) {
+          path(k) = w; onPath.set(w)
+          walk(k + 1)
+          onPath.clear(w)
+        }
+      }
+    }
+    path(0) = s; onPath.set(s)
+    walk(1)
+    out.result()
+  }
+
+  /** [[rings]]'s Spark-join loop. */
+  private[graft] def ringsJoin(g: PropertyGraph, source: String, dir: Direction.Value,
+                               labels: Seq[String], maxDepth: Int): DataFrame = {
     val edges = Traversals.adjacencyView(g, dir, labels)
     // (src,dst) pairs with ≥2 parallel edges in the raw (multiplicity-
     // preserving) step view — tiny, broadcast into the closure filter
@@ -575,7 +666,16 @@ object PathTraversals {
     // (checkpoint-backed, so reuse costs nothing; plan keys survive
     // store-resident mode, the walksMemo note)
     ssspMemo.getOrBuild(g.edges, (source, dir, labels, weightCol, rounds))(
-      weightedSsspCompute(g, source, dir, labels, weightCol, rounds))
+      LocalAdjacency.of(weightedEdgeView(g, dir, labels, weightCol)) match {
+        case Some(ix) =>
+          val spark = g.vertices.sparkSession
+          import spark.implicits._
+          ssspOut(relaxLocal(ix, source, rounds).toDF("id", "dist"))
+        case None => weightedSsspJoin(g, source, dir, labels, weightCol, rounds)
+      })
+
+  private def ssspOut(dist: DataFrame): DataFrame =
+    dist.select(col("id"), round(col("dist"), 6).as("dist"))
 
   /** The co-partitioned weighted edge view SSSP rounds plan against —
     * shared, pinned once per session (the pageRankViews shape). Exposed so
@@ -584,23 +684,69 @@ object PathTraversals {
     * query's cold time. */
   def weightedEdgeView(g: PropertyGraph, dir: Direction.Value,
                        labels: Seq[String], weightCol: String): DataFrame =
-    pinned(EdgeStep(dir, labels).edgesFor(g)
+    Traversals.indexed(pinned(EdgeStep(dir, labels).edgesFor(g)
       .select(col("src"), col("dst"),
         coalesce(col(weightCol).cast("double"), lit(1.0)).as("w"))
-      .repartition(col("src")))
+      .repartition(col("src"))))
 
-  private def weightedSsspCompute(g: PropertyGraph, source: String, dir: Direction.Value,
-                                  labels: Seq[String], weightCol: String, rounds: Int): DataFrame =
+  /** [[weightedSssp]]'s Spark loop (also [[weightedSsspConverged]]'s). */
+  private[graft] def weightedSsspJoin(g: PropertyGraph, source: String, dir: Direction.Value,
+                                      labels: Seq[String], weightCol: String,
+                                      rounds: Int): DataFrame =
     // co-partitioned by src once (the pageRank shape): rounds join on src,
     // so only the small dist side ever moves — the edge table never
     // re-shuffles across rounds
-    relaxLoopStatus(weightedEdgeView(g, dir, labels, weightCol), source, rounds, cut = None)
-      ._1.select(col("id"), round(col("dist"), 6).as("dist"))
+    ssspOut(relaxLoopStatus(weightedEdgeView(g, dir, labels, weightCol), source, rounds,
+      cut = None)._1)
+
+  /** [[relaxLoopStatus]] (cut = None) on the driver index: the same Jacobi
+    * rounds — each relaxes only the vertices that improved in the previous
+    * round, from their distances of that round — with the same double
+    * additions and strict-min updates, so the table is bit for bit the
+    * Spark loop's k-round bound. Returns unrounded (id, dist) rows. */
+  private def relaxLocal(ix: LocalAdjacency, source: String,
+                         rounds: Int): Seq[(String, Double)] = {
+    val s = ix.idOf(source)
+    if (s < 0) return Seq(source -> 0.0)
+    val n = ix.vertexCount
+    val dist = new Array[Double](n)
+    val reached = new java.util.BitSet(n)
+    val cand = new Array[Double](n)
+    val offered = new java.util.BitSet(n)
+    dist(s) = 0.0; reached.set(s)
+    var changed = Array(s)
+    var r = 0
+    while (r < rounds && changed.nonEmpty) {
+      r += 1
+      val touched = Array.newBuilder[Int]
+      for (u <- changed; e <- ix.from(u) until ix.until(u)) {
+        val v = ix.nbr(e)
+        val c = dist(u) + ix.weight(e)
+        if (!offered.get(v)) { offered.set(v); cand(v) = c; touched += v }
+        else if (c < cand(v)) cand(v) = c
+      }
+      // every candidate is read from `dist` before any is applied (Jacobi)
+      val next = Array.newBuilder[Int]
+      for (v <- touched.result()) {
+        offered.clear(v)
+        if (!reached.get(v) || cand(v) < dist(v)) {
+          dist(v) = cand(v); reached.set(v); next += v
+        }
+      }
+      changed = next.result()
+    }
+    val out = Seq.newBuilder[(String, Double)]
+    var v = reached.nextSetBit(0)
+    while (v >= 0) { out += ix.name(v) -> dist(v); v = reached.nextSetBit(v + 1) }
+    out.result()
+  }
 
   /** The ONE bounded delta-relaxation loop — shared verbatim by
-    * [[weightedSssp]], [[weightedSsspConverged]] (cut = None) and
-    * [[weightedPathPruned]] (cut = the landmark bound), so the pruned
-    * search stays bit-identical to the plain one by construction. Per round:
+    * [[weightedSsspJoin]] ([[weightedSssp]] off the driver index, and
+    * [[weightedSsspConverged]]; cut = None) and [[weightedPathPruned]]
+    * (cut = the landmark bound), so the pruned search stays bit-identical
+    * to the plain one by construction. Its driver-side twin is
+    * [[relaxLocal]]. Per round:
     * only vertices whose distance IMPROVED last round (and, with a cut,
     * sit within the bound) relax their edges — an unimproved vertex
     * already contributed the identical dist(u)+w candidates to an earlier
@@ -654,7 +800,7 @@ object PathTraversals {
   def weightedSsspConverged(g: PropertyGraph, source: String, dir: Direction.Value,
                             labels: Seq[String], weightCol: String,
                             maxRounds: Int = 100): DataFrame =
-    weightedSsspCompute(g, source, dir, labels, weightCol, maxRounds)
+    weightedSsspJoin(g, source, dir, labels, weightCol, maxRounds)
 
   /** Probe-then-verify weighted s→t distance: the warmup-built weighted
     * landmark index ([[graft.olap.Algorithms.weightedLandmarkIndex]])

@@ -9,18 +9,27 @@ import graft.core._
   *
   * The reference executes these as per-vertex prefix scans fanned out over a
   * thread pool (`OltpTraverser.traverseIdsByBfs`, `HugeTraverser
-  * .edgesOfVertex:376-440`) — a nested-loop index join. Here a frontier is a
-  * DataFrame and one BFS layer is ONE distributed hash join of the frontier
-  * against the edge table: batching, parallelism and memory arbitration all
-  * come from Spark. At 100 TB the frontier join shuffles on `src`/`id`; a
-  * graph stored bucketed by `src` co-locates every layer with zero shuffle
-  * on the edges side.
+  * .edgesOfVertex:376-440`) — a nested-loop index join. Here a traverser
+  * answers in one of two regimes:
+  *  - driver index: when its edge view is pinned and at most
+  *    [[bfsBroadcastMaxRows]] rows (small enough to ship whole to every
+  *    executor), the pin also builds a [[graft.core.LocalAdjacency]] and
+  *    `kneighbor`/`koutNearest` (degree < 0), `shortestPathDist` and
+  *    `PathTraversals.allShortestPaths`/`rings`/`weightedSssp` walk it on
+  *    the driver and return a local relation — no Spark job;
+  *  - Spark join: otherwise (views over the bound, `SPARK_GRAFT_NOPIN=1`,
+  *    `SPARK_GRAFT_BUCKETED=1`, and every other traverser) a frontier is a
+  *    DataFrame and one BFS layer is ONE distributed hash join of the
+  *    frontier against the edge table: batching, parallelism and memory
+  *    arbitration all come from Spark. At 100 TB the frontier join shuffles
+  *    on `src`/`id`; a graph stored bucketed by `src` co-locates every
+  *    layer with zero shuffle on the edges side.
   *
-  * Scale notes baked into the kernel:
+  * Scale notes baked into the Spark-join loops:
   *  - every loop iteration derives from the *previous frontier only* (no
   *    recomputation of the whole lineage per layer);
-  *  - `localCheckpoint` every [[BfsFrame.checkpointEvery]] layers cuts the
-  *    growing lineage that otherwise re-executes at each action;
+  *  - each layer's frontier is cut with an eager `localCheckpoint`, so the
+  *    lineage never grows with the depth;
   *  - visited/dedup is a `left_anti` join (shuffle on id), the distributed
   *    analogue of the reference's concurrent id set
   *    (`ConcurrentVerticesConsumer`, OltpTraverser.java:282-320).
@@ -56,6 +65,14 @@ object Traversals {
     * which is the right shape there anyway. */
   private[graft] val frontierPushdownMaxIds = 2000
 
+  /** Pinned edge views at or below this row count never profit from
+    * pushdown: scanning the whole cached view costs less than one per-hop
+    * driver round-trip, so the collect job is pure overhead (measured:
+    * rings/multi-source BFS over 25-row and 1.5k-row derived graphs paid
+    * +0.1-0.3s per hop for nothing). Big views keep the pruning — there
+    * the skipped batch decode dominates. */
+  private[graft] val pruneSkipEdgeRows = 50000L
+
   /** Edge view pruned to a frontier's id set when that set is small enough
     * to hold on the driver: one tiny distinct+collect job against the
     * (materialized) frontier, then a literal `src IN (...)` the clustered
@@ -66,14 +83,6 @@ object Traversals {
     * the full table — correct once the frontier is |V|-scale). Callers
     * must pass a frontier backed by a checkpoint/cache so the collect
     * doesn't recompute a long lineage. */
-  /** Pinned edge views at or below this row count never profit from
-    * pushdown: scanning the whole cached view costs less than one per-hop
-    * driver round-trip, so the collect job is pure overhead (measured:
-    * rings/multi-source BFS over 25-row and 1.5k-row derived graphs paid
-    * +0.1-0.3s per hop for nothing). Big views keep the pruning — there
-    * the skipped batch decode dominates. */
-  private[graft] val pruneSkipEdgeRows = 50000L
-
   private[graft] def pruneForFrontier(edges: DataFrame, frontier: DataFrame,
                                       idCol: String = "id",
                                       knownRows: Long = -1L): DataFrame = {
@@ -134,8 +143,8 @@ object Traversals {
     * bare un-partitioned construction would cold-pin a second copy of the
     * edge table. */
   private[graft] def multiplicityView(g: PropertyGraph, step: EdgeStep): DataFrame =
-    pinned(step.edgesFor(g).select(col("src"), col("dst"))
-      .repartition(col("src")))
+    indexed(pinned(step.edgesFor(g).select(col("src"), col("dst"))
+      .repartition(col("src"))))
 
   /** Labeled adjacency (src, label, dst) pinned per (dir, labels) — the
     * base relation per-hop degree truncation windows over. Clustered by src
@@ -198,15 +207,28 @@ object Traversals {
       }
     }
 
-  /** k-neighbor: all vertices within ≤ maxDepth hops of source, excluding
-    * the source itself (reference `KneighborTraverser.kneighbor:39`,
-    * `KneighborRecords.getRecords` skips record 0). Layered BFS with
-    * first-visit semantics. Returns DF(id). */
   /** Materialize the per-traversal edge view once — iterative loops would
     * otherwise re-evaluate the 6-table union scan every layer. On a cluster
     * this is `persist(MEMORY_AND_DISK)` over the adjacency; localCheckpoint
     * plays that role in local mode. */
   private def pinned(df: DataFrame): DataFrame = graft.core.Pin.pin(df)
+
+  /** Builds the driver-side [[LocalAdjacency]] of a view that is pinned and
+    * at most [[bfsBroadcastMaxRows]] rows — the bound under which the view
+    * already counts as small enough to ship whole to every executor.
+    * Returns the view. */
+  private[graft] def indexed(view: DataFrame): DataFrame = {
+    if (Pin.rowsOf(view).exists(_ <= bfsBroadcastMaxRows)) LocalAdjacency.register(view)
+    view
+  }
+
+  /** Rows answered on the driver as a local relation: collecting it (or a
+    * projection of it) starts no Spark job. */
+  private def localIds(g: PropertyGraph, ids: Seq[String]): DataFrame = {
+    val spark = g.vertices.sparkSession
+    import spark.implicits._
+    ids.toDF("id")
+  }
 
   /** THE shared distinct adjacency view for (dir, labels) — pinned once per
     * session (the Bench warmup pre-materializes the label-free OUT/BOTH
@@ -220,7 +242,7 @@ object Traversals {
     * weighted SSSP — pin their own src-partitioned views instead). */
   private[graft] def adjacencyView(g: PropertyGraph, dir: Direction.Value,
                                    labels: Seq[String] = Nil): DataFrame =
-    pinned(EdgeStep(dir, labels).edgesFor(g)
+    indexed(pinned(EdgeStep(dir, labels).edgesFor(g)
       .select(col("src"), col("dst")).distinct()
       // clustered by src WITHIN each hash partition: the columnar cache keeps
       // per-batch min/max stats, so a frontier pushed down as `src IN (...)`
@@ -229,17 +251,48 @@ object Traversals {
       // order = owner vertex id, BinarySerializer edge keys) re-expressed as
       // cache-batch pruning. Sort order alone declares no outputPartitioning,
       // so the planner keeps broadcasting frontiers (no SMJ bias).
-      .sortWithinPartitions(col("src")))
+      .sortWithinPartitions(col("src"))))
 
   /** Thrown when a traversal touches more elements than its capacity guard
     * allows (reference `Query.DEFAULT_CAPACITY` = 800 000,
     * `HugeTraverser.checkCapacity`). */
-  final class CapacityExceededException(n: Long, capacity: Long)
+  final class CapacityExceededException(val n: Long, val capacity: Long)
     extends RuntimeException(s"traversal touched $n elements, capacity $capacity")
 
+  private def checkCapacity(n: Long, capacity: Long): Unit =
+    if (capacity >= 0L && n > capacity) throw new CapacityExceededException(n, capacity)
+
+  /** The driver index of the (dir, labels) adjacency, for the kneighbor/kout
+    * family: only the uncapped walk (degree < 0) reads it; the degree cap
+    * keeps its labeled-adjacency join. */
+  private def uncappedIndex(g: PropertyGraph, dir: Direction.Value,
+                            labels: Seq[String], degree: Long): Option[LocalAdjacency] =
+    if (degree < 0L) LocalAdjacency.of(adjacencyView(g, dir, labels)) else None
+
+  /** k-neighbor: all vertices within ≤ maxDepth hops of source, excluding
+    * the source itself (reference `KneighborTraverser.kneighbor:39`,
+    * `KneighborRecords.getRecords` skips record 0). Layered BFS with
+    * first-visit semantics; `capacity` bounds the visited set after each
+    * layer. Returns DF(id). */
   def kneighbor(g: PropertyGraph, source: String, dir: Direction.Value,
                 labels: Seq[String] = Nil, maxDepth: Int, degree: Long = -1L,
-                capacity: Long = -1L): DataFrame = {
+                capacity: Long = -1L): DataFrame =
+    uncappedIndex(g, dir, labels, degree) match {
+      case Some(ix) =>
+        val out = Seq.newBuilder[String]
+        ix.layers(source, maxDepth) { (_, layer, visited) =>
+          checkCapacity(visited, capacity)
+          layer.foreach(v => out += ix.name(v))
+          true
+        }
+        localIds(g, out.result())
+      case None => kneighborJoin(g, source, dir, labels, maxDepth, degree, capacity)
+    }
+
+  /** [[kneighbor]]'s Spark-join loop. */
+  private[graft] def kneighborJoin(g: PropertyGraph, source: String, dir: Direction.Value,
+                                   labels: Seq[String], maxDepth: Int, degree: Long,
+                                   capacity: Long): DataFrame = {
     val step = stepFn(g, dir, labels, degree)
     val spark = g.vertices.sparkSession
     import spark.implicits._
@@ -265,19 +318,13 @@ object Traversals {
         // checkpoint keeps the visited-broadcast decision sound
         frontierIds = None; visitedCnt += frontier.count()
       }
-      if (capacity >= 0) {
-        val n = visited.count()
-        if (n > capacity) throw new CapacityExceededException(n, capacity)
-      }
+      checkCapacity(visited, capacity)
     }
     visited.filter(col("id") =!= source).distinct()
   }
 
-  private def checkKoutCapacity(visited: DataFrame, capacity: Long): Unit =
-    if (capacity >= 0L) {
-      val n = visited.count()
-      if (n > capacity) throw new CapacityExceededException(n, capacity)
-    }
+  private def checkCapacity(visited: DataFrame, capacity: Long): Unit =
+    if (capacity >= 0L) checkCapacity(visited.count(), capacity)
 
   /** k-out nearest=true: vertices at exactly `depth` hops and not reachable
     * sooner (reference `KoutTraverser.kout:43` with visited set); `degree`
@@ -285,7 +332,23 @@ object Traversals {
     * (both as in kneighbor / `KoutTraverser.kout:44-45`). */
   def koutNearest(g: PropertyGraph, source: String, dir: Direction.Value,
                   labels: Seq[String] = Nil, depth: Int,
-                  degree: Long = -1L, capacity: Long = -1L): DataFrame = {
+                  degree: Long = -1L, capacity: Long = -1L): DataFrame =
+    uncappedIndex(g, dir, labels, degree) match {
+      case Some(ix) =>
+        var last = Seq(source) // depth ≤ 0 answers the source itself
+        ix.layers(source, depth) { (_, layer, visited) =>
+          checkCapacity(visited, capacity)
+          last = layer.toSeq.map(ix.name)
+          true
+        }
+        localIds(g, last)
+      case None => koutNearestJoin(g, source, dir, labels, depth, degree, capacity)
+    }
+
+  /** [[koutNearest]]'s Spark-join loop. */
+  private[graft] def koutNearestJoin(g: PropertyGraph, source: String, dir: Direction.Value,
+                                     labels: Seq[String], depth: Int, degree: Long,
+                                     capacity: Long): DataFrame = {
     val step = stepFn(g, dir, labels, degree)
     val spark = g.vertices.sparkSession
     import spark.implicits._
@@ -309,7 +372,7 @@ object Traversals {
       } else {
         frontierIds = None; visitedCnt += frontier.count()
       }
-      checkKoutCapacity(visited, capacity)
+      checkCapacity(visited, capacity)
     }
     frontier
   }
@@ -338,7 +401,7 @@ object Traversals {
       } else frontierIds = None
       if (capacity >= 0L) {
         touched = touched.union(frontier)
-        checkKoutCapacity(touched.distinct(), capacity)
+        checkCapacity(touched.distinct(), capacity)
       }
     }
     frontier.filter(col("id") =!= source)
@@ -397,7 +460,7 @@ object Traversals {
           frontierIds = None; visitedCnt += frontier.count()
         }
         if (capacity >= 0L)
-          checkKoutCapacity(if (nearest) visited else visited.distinct(), capacity)
+          checkCapacity(if (nearest) visited else visited.distinct(), capacity)
       }
     }
     if (nearest) frontier else frontier.filter(col("id") =!= source)
@@ -623,6 +686,27 @@ object Traversals {
     val spark = g.vertices.sparkSession
     import spark.implicits._
     if (source == target) return Seq(0L).toDF("dist")
+    LocalAdjacency.of(adjacencyView(g, dir, labels)) match {
+      case Some(ix) =>
+        // plain BFS: the first layer holding the target is the distance the
+        // bidirectional meet finds
+        val t = ix.idOf(target)
+        var found = -1L
+        if (t >= 0) ix.layers(source, maxDepth) { (d, layer, _) =>
+          if (layer.contains(t)) found = d
+          found < 0
+        }
+        if (found >= 0) Seq(found).toDF("dist") else Seq.empty[Long].toDF("dist")
+      case None => shortestPathDistJoin(g, source, target, dir, labels, maxDepth)
+    }
+  }
+
+  /** [[shortestPathDist]]'s Spark-join loop (source ≠ target). */
+  private[graft] def shortestPathDistJoin(g: PropertyGraph, source: String, target: String,
+                                          dir: Direction.Value, labels: Seq[String],
+                                          maxDepth: Int): DataFrame = {
+    val spark = g.vertices.sparkSession
+    import spark.implicits._
     val fwdEdges = Traversals.adjacencyView(g, dir, labels)
     val revDir = dir match {
       case Direction.OUT  => Direction.IN

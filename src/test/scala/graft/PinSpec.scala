@@ -40,6 +40,27 @@ class PinSpec extends SparkSpec {
     assert(Pin.pin(df.distinct()).count() === 2L)
   }
 
+  test("clear after an in-place parquet overwrite: traversals answer from the new data") {
+    import graft.core.{Direction, GraphSchema, LocalAdjacency, PropertyGraph}
+    import graft.traverse.Traversals
+    val dir = java.nio.file.Files.createTempDirectory("pinspec").resolve("edges").toString
+    def write(edges: Seq[(String, String)]): Unit =
+      edges.toDF("src", "dst").withColumn("label", lit("e"))
+        .withColumn("sort_values", lit(null).cast("string"))
+        .write.mode("overwrite").parquet(dir)
+    def graph = PropertyGraph(Seq("a", "b", "c").map((_, "node")).toDF("id", "label"),
+      spark.read.parquet(dir), GraphSchema(Nil, Nil, Nil))
+    def reach = Traversals.kneighbor(graph, "a", Direction.OUT, Nil, 3)
+      .collect().map(_.getString(0)).toSet
+    write(Seq(("a", "b")))
+    assert(reach === Set("b"))
+    write(Seq(("a", "c"), ("c", "b")))
+    Pin.clear()
+    assert(reach === Set("b", "c"))
+    assert(LocalAdjacency.of(Traversals.adjacencyView(graph, Direction.OUT))
+      .exists(_.edgeCount === 2)) // the index was rebuilt from the new file
+  }
+
   test("PlanMemo: sameResult frames share one build; plans and hyper-params separate") {
     val memo = new Pin.PlanMemo[Int]
     var builds = 0
