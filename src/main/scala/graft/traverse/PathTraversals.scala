@@ -8,8 +8,10 @@ import graft.core.Superstep.Step
 
 /** Path-producing traversers (SURVEY §2.12): allShortestPaths, rays, rings,
   * template/customized paths, collection paths, multi-node shortest path,
-  * crosspoints, bounded weighted SSSP. All share the simple-path frontier
-  * shape: a DataFrame of (id, path array) expanded one join per hop. */
+  * crosspoints, bounded weighted SSSP. The path enumerators share the
+  * simple-path frontier shape: a DataFrame of (id, path array) expanded one
+  * join per hop; multi-node shortest path and crosspoints run the
+  * multi-source BFS of [[graft.olap.Algorithms]]. */
 object PathTraversals {
 
   private def pinned(df: DataFrame): DataFrame = graft.core.Pin.pin(df)
@@ -602,26 +604,19 @@ object PathTraversals {
   }
 
   /** Pairwise shortest distances among a vertex set (reference
-    * `MultiNodeShortestPathTraverser:68`): one multi-source BFS, every
-    * source tagged, min first-visit distance per ordered pair a<b. */
+    * `MultiNodeShortestPathTraverser:68`): one multi-source BFS over the
+    * (dir, labels) adjacency, every source tagged, min first-visit distance
+    * per ordered pair a<b — for OUT and IN, the distance from a to b along
+    * that direction. */
   def multiNodeShortestDist(g: PropertyGraph, nodes: Seq[String],
                             dir: Direction.Value, labels: Seq[String],
                             maxDepth: Int): DataFrame = {
     val spark = g.vertices.sparkSession
     import spark.implicits._
     val verts = nodes.toDF("id")
-    // BOTH adjacency is already symmetric+distinct → reuse the session-pinned
-    // shared view (same materialization every BFS query plans against)
-    // instead of building a private union+distinct copy cold inside the query
-    val dists =
-      if (dir == Direction.BOTH)
-        graft.olap.Algorithms.multiSourceBfsAdj(verts,
-          Traversals.adjacencyView(g, dir, labels), maxDepth, symmetric = true)
-      else
-        graft.olap.Algorithms.multiSourceBfs(verts,
-          EdgeStep(dir, labels).edgesFor(g)
-            .select(col("src"), col("dst")).distinct(), maxDepth)
-    dists.join(verts.withColumnRenamed("id", "root2"), col("id") === col("root2"), "left_semi")
+    graft.olap.Algorithms.multiSourceBfsAdj(verts, Traversals.adjacencyView(g, dir, labels),
+      maxDepth, symmetric = dir == Direction.BOTH)
+      .join(verts.withColumnRenamed("id", "root2"), col("id") === col("root2"), "left_semi")
       .filter(col("root") < col("id"))
       .select(col("root").as("a"), col("id").as("b"), col("dist"))
   }
@@ -629,24 +624,16 @@ object PathTraversals {
   /** Crosspoints: vertices reachable from ALL sources within maxDepth,
     * sources excluded (reference `Path.crosspoint`, CrosspointsAPI).
     * One tagged multi-source BFS over a single pinned edge view — not one
-    * BFS per source. */
+    * BFS per source. The row-tagged loop, not the bitmask wave: on a
+    * handful of roots the bitmask path measured slower (ROADMAP
+    * direction 1). */
   def crosspoints(g: PropertyGraph, sources: Seq[String], dir: Direction.Value,
                   labels: Seq[String], maxDepth: Int): DataFrame = {
     val spark = g.vertices.sparkSession
     import spark.implicits._
-    val edges = Traversals.adjacencyView(g, dir, labels)
-    var seen = sources.map(s => (s, s)).toDF("root", "id")
-    var frontier = seen
-    val pruner = new Traversals.FrontierPruner
-    for (d <- 1 to maxDepth) {
-      frontier = frontier.select(col("root"), col("id").as("src"))
-        .join(pruner.prune(edges, frontier), Seq("src"))
-        .select(col("root"), col("dst").as("id")).distinct()
-        .join(seen, Seq("root", "id"), "left_anti")
-        .localCheckpoint(true)
-      seen = seen.union(frontier)
-    }
-    seen.groupBy(col("id")).agg(countDistinct(col("root")).as("nroots"))
+    graft.olap.Algorithms.multiSourceBfsTagged(sources.toDF("id"),
+      Traversals.adjacencyView(g, dir, labels), maxDepth, symmetric = dir == Direction.BOTH)
+      .groupBy(col("id")).agg(countDistinct(col("root")).as("nroots"))
       .filter(col("nroots") === sources.length)
       .select(col("id"))
       .filter(!col("id").isin(sources: _*))

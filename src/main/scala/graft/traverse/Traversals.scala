@@ -25,14 +25,13 @@ import graft.core._
   *    on `src`/`id`; a graph stored bucketed by `src` co-locates every
   *    layer with zero shuffle on the edges side.
   *
-  * Scale notes baked into the Spark-join loops:
-  *  - every loop iteration derives from the *previous frontier only* (no
-  *    recomputation of the whole lineage per layer);
-  *  - each layer's frontier is cut with an eager `localCheckpoint`, so the
-  *    lineage never grows with the depth;
-  *  - visited/dedup is a `left_anti` join (shuffle on id), the distributed
-  *    analogue of the reference's concurrent id set
-  *    (`ConcurrentVerticesConsumer`, OltpTraverser.java:282-320).
+  * The kneighbor/kout family runs on one Spark layer loop, [[layerLoop]]
+  * (the reference drives them all from `OltpTraverser.traverseIdsByBfs`):
+  * each layer derives from the previous one only and is cut with an eager
+  * `localCheckpoint`, and first-visit dedup is a `left_anti` join against
+  * the reached set — the distributed analogue of the reference's
+  * concurrent id set (`ConcurrentVerticesConsumer`,
+  * OltpTraverser.java:282-320).
   */
 object Traversals {
 
@@ -182,6 +181,10 @@ object Traversals {
       .select(col("dst").as("id"))
   }
 
+  /** One layer's expansion: (frontier, its ids when the driver holds them)
+    * → the next layer's ids, duplicates allowed. */
+  private type Expand = (DataFrame, Option[Array[String]]) => DataFrame
+
   /** One BFS expansion step for the kneighbor/kout family: degree ≥ 0 uses
     * the frontier-local truncation, otherwise the shared distinct view.
     * When the caller holds the frontier's ids (driver-tracked BFS — the
@@ -189,8 +192,7 @@ object Traversals {
     * `src IN (...)` the clustered cache scan batch-prunes, replacing the
     * frontier join entirely; otherwise the broadcast/shuffle join runs. */
   private def stepFn(g: PropertyGraph, dir: Direction.Value,
-                     labels: Seq[String], degree: Long):
-      (DataFrame, Option[Array[String]]) => DataFrame =
+                     labels: Seq[String], degree: Long): Expand =
     if (degree >= 0L) {
       val la = labeledAdjacency(g, dir, labels)
       (f, ids) => ids match {
@@ -262,6 +264,54 @@ object Traversals {
   private def checkCapacity(n: Long, capacity: Long): Unit =
     if (capacity >= 0L && n > capacity) throw new CapacityExceededException(n, capacity)
 
+  /** The last layer and the reached set (source ∪ every layer) of a
+    * [[layerLoop]]. */
+  private final case class Layers(frontier: DataFrame, reached: DataFrame)
+
+  /** THE Spark layer loop of the kneighbor/kout family, the Spark twin of
+    * [[LocalAdjacency.layers]]: layer d is the distinct ids `step(d)`
+    * expands the previous layer to; with `nearest` they are anti-joined
+    * against everything reached so far (first visit), otherwise the walk
+    * keeps re-reached vertices. Per layer:
+    *  - one eager `localCheckpoint`, so the lineage never grows with the
+    *    depth;
+    *  - one collect of at most [[frontierPushdownMaxIds]] + 1 ids off that
+    *    checkpoint. It is at once the drain (an empty layer ends the loop)
+    *    and the next layer's `src IN (...)` list. A wider layer takes the
+    *    join path instead; in first-visit mode its exact count keeps the
+    *    reached-set broadcast gate sound;
+    *  - the capacity guard. First-visit layers are disjoint, so the running
+    *    reached count is exact; a walk counts the distinct ids of source ∪
+    *    every layer.
+    * It stays off [[Superstep]]: a Superstep drain is one count per round,
+    * a job per layer on top of the collect that already answers it. */
+  private def layerLoop(g: PropertyGraph, source: String, depth: Int, nearest: Boolean,
+                        capacity: Long)(step: Int => Expand): Layers = {
+    val spark = g.vertices.sparkSession
+    import spark.implicits._
+    var reached = Seq(source).toDF("id")
+    var reachedCnt = 1L // first-visit mode only
+    var frontier = reached
+    var ids: Option[Array[String]] = Some(Array(source))
+    var d = 0
+    while (d < depth && ids.forall(_.nonEmpty)) {
+      d += 1
+      val next = step(d)(frontier, ids).distinct()
+      frontier = (if (nearest)
+        next.join(maybeBroadcast(reached, reachedCnt), Seq("id"), "left_anti")
+      else next).localCheckpoint(true)
+      reached = reached.union(frontier)
+      val pulled = frontier.select(col("id"))
+        .limit(frontierPushdownMaxIds + 1).as[String].collect()
+      ids = if (pulled.length <= frontierPushdownMaxIds) Some(pulled) else None
+      if (nearest) {
+        reachedCnt += ids.fold(frontier.count())(_.length.toLong)
+        checkCapacity(reachedCnt, capacity)
+      } else if (capacity >= 0L) checkCapacity(reached.distinct().count(), capacity)
+    }
+    Layers(frontier, reached)
+  }
+
   /** The driver index of the (dir, labels) adjacency, for the kneighbor/kout
     * family: only the uncapped walk (degree < 0) reads it; the degree cap
     * keeps its labeled-adjacency join. */
@@ -294,37 +344,9 @@ object Traversals {
                                    labels: Seq[String], maxDepth: Int, degree: Long,
                                    capacity: Long): DataFrame = {
     val step = stepFn(g, dir, labels, degree)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    var visited = Seq(source).toDF("id")
-    var visitedCnt = 1L
-    var frontier = visited
-    var frontierIds: Option[Array[String]] = Some(Array(source))
-    var depth = 0
-    var live = true
-    while (live && depth < maxDepth) {
-      depth += 1
-      frontier = step(frontier, frontierIds).distinct()
-        .join(maybeBroadcast(visited, visitedCnt), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.union(frontier)
-      val pulled = frontier.select(col("id"))
-        .limit(frontierPushdownMaxIds + 1).as[String].collect()
-      if (pulled.length <= frontierPushdownMaxIds) {
-        frontierIds = Some(pulled); visitedCnt += pulled.length
-        live = pulled.nonEmpty // an exhausted frontier ends the walk early
-      } else {
-        // past the literal-IN regime: join path; exact count off the
-        // checkpoint keeps the visited-broadcast decision sound
-        frontierIds = None; visitedCnt += frontier.count()
-      }
-      checkCapacity(visited, capacity)
-    }
-    visited.filter(col("id") =!= source).distinct()
+    layerLoop(g, source, maxDepth, nearest = true, capacity)(_ => step).reached
+      .filter(col("id") =!= source).distinct()
   }
-
-  private def checkCapacity(visited: DataFrame, capacity: Long): Unit =
-    if (capacity >= 0L) checkCapacity(visited.count(), capacity)
 
   /** k-out nearest=true: vertices at exactly `depth` hops and not reachable
     * sooner (reference `KoutTraverser.kout:43` with visited set); `degree`
@@ -350,31 +372,7 @@ object Traversals {
                                      labels: Seq[String], depth: Int, degree: Long,
                                      capacity: Long): DataFrame = {
     val step = stepFn(g, dir, labels, degree)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    var visited = Seq(source).toDF("id")
-    var visitedCnt = 1L
-    var frontier = visited
-    var frontierIds: Option[Array[String]] = Some(Array(source))
-    var d = 0
-    var live = true
-    while (live && d < depth) {
-      d += 1
-      frontier = step(frontier, frontierIds).distinct()
-        .join(maybeBroadcast(visited, visitedCnt), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.union(frontier)
-      val pulled = frontier.select(col("id"))
-        .limit(frontierPushdownMaxIds + 1).as[String].collect()
-      if (pulled.length <= frontierPushdownMaxIds) {
-        frontierIds = Some(pulled); visitedCnt += pulled.length
-        live = pulled.nonEmpty
-      } else {
-        frontierIds = None; visitedCnt += frontier.count()
-      }
-      checkCapacity(visited, capacity)
-    }
-    frontier
+    layerLoop(g, source, depth, nearest = true, capacity)(_ => step).frontier
   }
 
   /** k-out nearest=false: vertices reachable by SOME walk of exactly `depth`
@@ -383,36 +381,15 @@ object Traversals {
               labels: Seq[String] = Nil, depth: Int,
               degree: Long = -1L, capacity: Long = -1L): DataFrame = {
     val step = stepFn(g, dir, labels, degree)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    var frontier = Seq(source).toDF("id")
-    var frontierIds: Option[Array[String]] = Some(Array(source))
-    var touched = frontier
-    var d = 0
-    var live = true
-    while (live && d < depth) {
-      d += 1
-      frontier = step(frontier, frontierIds).distinct().localCheckpoint(true)
-      val pulled = frontier.select(col("id"))
-        .limit(frontierPushdownMaxIds + 1).as[String].collect()
-      if (pulled.length <= frontierPushdownMaxIds) {
-        frontierIds = Some(pulled)
-        live = pulled.nonEmpty // empty stays empty: remaining layers no-op
-      } else frontierIds = None
-      if (capacity >= 0L) {
-        touched = touched.union(frontier)
-        checkCapacity(touched.distinct(), capacity)
-      }
-    }
-    frontier.filter(col("id") =!= source)
+    layerLoop(g, source, depth, nearest = false, capacity)(_ => step).frontier
+      .filter(col("id") =!= source)
   }
 
   /** Per-hop step function for [[customizedKout]]: plain (dir, labels,
     * degree) hops reuse [[stepFn]]'s frontier-local truncation; hops with a
     * property filter or skipDegree ride the full `EdgeStep.edgesFor` view
     * (cond/skipDegree/degree applied there), pinned once per step shape. */
-  private def hopStepFn(g: PropertyGraph, es: EdgeStep):
-      (DataFrame, Option[Array[String]]) => DataFrame =
+  private def hopStepFn(g: PropertyGraph, es: EdgeStep): Expand =
     if (es.cond.isEmpty && es.skipDegree == 0L)
       stepFn(g, es.direction, es.labels, es.degree)
     else {
@@ -431,39 +408,13 @@ object Traversals {
     * layer i+1; total depth = `steps.length`), which subsumes the
     * reference's repeat-one-Steps-maxDepth-times shape
     * (`Seq.fill(maxDepth)(step)`) and adds per-hop heterogeneity.
-    * `nearest=true` keeps kout's first-visit semantics (per-layer visited
-    * anti-join); `nearest=false` returns targets of some walk through all
-    * steps, source excluded. Frontier pushdown, broadcast gating and the
-    * capacity guard are shared with [[koutNearest]]. */
+    * `nearest=true` keeps kout's first-visit semantics; `nearest=false`
+    * returns targets of some walk through all steps, source excluded. */
   def customizedKout(g: PropertyGraph, source: String, steps: Seq[EdgeStep],
                      nearest: Boolean = true, capacity: Long = -1L): DataFrame = {
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    var visited = Seq(source).toDF("id")
-    var visitedCnt = 1L
-    var frontier = visited
-    var frontierIds: Option[Array[String]] = Some(Array(source))
-    var live = true
-    steps.foreach { es =>
-      if (live) {
-        var next = hopStepFn(g, es)(frontier, frontierIds).distinct()
-        if (nearest)
-          next = next.join(maybeBroadcast(visited, visitedCnt), Seq("id"), "left_anti")
-        frontier = next.localCheckpoint(true)
-        visited = visited.union(frontier)
-        val pulled = frontier.select(col("id"))
-          .limit(frontierPushdownMaxIds + 1).as[String].collect()
-        if (pulled.length <= frontierPushdownMaxIds) {
-          frontierIds = Some(pulled); visitedCnt += pulled.length
-          live = pulled.nonEmpty
-        } else {
-          frontierIds = None; visitedCnt += frontier.count()
-        }
-        if (capacity >= 0L)
-          checkCapacity(if (nearest) visited else visited.distinct(), capacity)
-      }
-    }
-    if (nearest) frontier else frontier.filter(col("id") =!= source)
+    val out = layerLoop(g, source, steps.length, nearest, capacity)(
+      d => hopStepFn(g, steps(d - 1))).frontier
+    if (nearest) out else out.filter(col("id") =!= source)
   }
 
   /** Customized k-neighbor (reference
@@ -471,37 +422,12 @@ object Traversals {
     * `maxDepth` applications of ONE Steps bundle — the reference repeats
     * the same steps object every layer — source excluded; `limit`
     * truncates to the lowest ids (the reference cuts in insertion order,
-    * which is storage-dependent; ascending-id is the deterministic twin).
-    * Shares the per-hop machinery (property-filtered pinned step view via
-    * [[hopStepFn]], frontier pushdown, visited broadcast gate) with
-    * [[customizedKout]] and [[kneighbor]]. */
+    * which is storage-dependent; ascending-id is the deterministic twin). */
   def customizedKneighbor(g: PropertyGraph, source: String, step: EdgeStep,
                           maxDepth: Int, limit: Long = -1L): DataFrame = {
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
     val hop = hopStepFn(g, step)
-    var visited = Seq(source).toDF("id")
-    var visitedCnt = 1L
-    var frontier = visited
-    var frontierIds: Option[Array[String]] = Some(Array(source))
-    var depth = 0
-    var live = true
-    while (live && depth < maxDepth) {
-      depth += 1
-      frontier = hop(frontier, frontierIds).distinct()
-        .join(maybeBroadcast(visited, visitedCnt), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.union(frontier)
-      val pulled = frontier.select(col("id"))
-        .limit(frontierPushdownMaxIds + 1).as[String].collect()
-      if (pulled.length <= frontierPushdownMaxIds) {
-        frontierIds = Some(pulled); visitedCnt += pulled.length
-        live = pulled.nonEmpty
-      } else {
-        frontierIds = None; visitedCnt += frontier.count()
-      }
-    }
-    val out = visited.filter(col("id") =!= source).distinct()
+    val out = layerLoop(g, source, maxDepth, nearest = true, capacity = -1L)(_ => hop)
+      .reached.filter(col("id") =!= source).distinct()
     if (limit >= 0L) out.orderBy(col("id")).limit(limit.toInt) else out
   }
 
@@ -746,27 +672,11 @@ object Traversals {
   /** All simple-vertex paths source→target up to maxDepth hops, as
     * '->'-joined id strings (reference `PathsTraverser.paths:38`; vertex
     * paths — parallel multi-edges collapse). Cycles are excluded the way the
-    * reference's Path.contains check does. */
+    * reference's Path.contains check does. The one-source, one-target case
+    * of [[PathTraversals.collectionPaths]]. */
   def paths(g: PropertyGraph, source: String, target: String, dir: Direction.Value,
-            labels: Seq[String] = Nil, maxDepth: Int): DataFrame = {
-    // distinct edge view pinned once (shared across queries via Pin): with a
-    // distinct seed, extended paths stay distinct by construction, so no
-    // per-hop distinct shuffle of the path frontier is needed
-    val edges = Traversals.adjacencyView(g, dir, labels)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    var frontier = Seq(Tuple2(source, Seq(source))).toDF("id", "path")
-    var acc = frontier.filter(lit(false))
-    for (d <- 1 to maxDepth) {
-      frontier = frontier.select(col("id").as("src"), col("path"))
-        .join(edges, Seq("src"))
-        .filter(!array_contains(col("path"), col("dst"))) // simple paths
-        .select(col("dst").as("id"), concat(col("path"), array(col("dst"))).as("path"))
-        .localCheckpoint(true)
-      acc = acc.unionByName(frontier.filter(col("id") === target))
-    }
-    acc.select(concat_ws("->", col("path")).as("path")).distinct()
-  }
+            labels: Seq[String] = Nil, maxDepth: Int): DataFrame =
+    PathTraversals.collectionPaths(g, Seq(source), Seq(target), dir, labels, maxDepth)
 
   /** Multi-step reachability count (reference `CountTraverser.count:47`) —
     * edge-path count without dedup: one count per distinct walk. */

@@ -78,6 +78,37 @@ class LocalAdjacencySpec extends SparkSpec {
       PathTraversals.weightedSssp(g, s, dir, labels, weight, rounds))(
       PathTraversals.weightedSsspJoin(g, s, dir, labels, weight, rounds))
 
+  /** Targets of some walk of exactly `depth` steps, source excluded, walked
+    * on the index of the (dir, labels) view. */
+  private def walk(g: PropertyGraph, s: String, dir: Direction.Value,
+                   labels: Seq[String], depth: Int): Seq[String] = {
+    val ix = LocalAdjacency.of(Traversals.adjacencyView(g, dir, labels)).get
+    var layer = Set(ix.idOf(s)).filter(_ >= 0)
+    for (_ <- 1 to depth)
+      layer = layer.flatMap(v => (ix.from(v) until ix.until(v)).map(ix.nbr))
+    (layer.map(ix.name) - s).toSeq.sorted
+  }
+
+  /** The Spark layer loop's other modes over one repeated EdgeStep:
+    * `customizedKout` and `customizedKneighbor` must equal the index
+    * answers of `koutNearest` and `kneighbor`; the walk mode (`koutAll`,
+    * `customizedKout` without `nearest`) must equal the index walk. */
+  private def loopModes(g: PropertyGraph, s: String, dir: Direction.Value,
+                        labels: Seq[String], depth: Int): Unit = {
+    val steps = Seq.fill(depth)(EdgeStep(dir, labels))
+    val what = s"$s $dir $labels $depth"
+    same(s"customizedKout nearest $what")(
+      Traversals.koutNearest(g, s, dir, labels, depth))(
+      Traversals.customizedKout(g, s, steps))
+    same(s"customizedKneighbor $what")(
+      Traversals.kneighbor(g, s, dir, labels, depth))(
+      Traversals.customizedKneighbor(g, s, EdgeStep(dir, labels), depth))
+    val walked = Right(walk(g, s, dir, labels, depth))
+    assert(answer(Traversals.koutAll(g, s, dir, labels, depth)) === walked, s"koutAll $what")
+    assert(answer(Traversals.customizedKout(g, s, steps, nearest = false)) === walked,
+      s"customizedKout walk $what")
+  }
+
   private val dirs = Seq(Direction.OUT, Direction.IN, Direction.BOTH)
 
   /** Per vertex label of the sf0.001 graph: one anchor drawn uniformly and
@@ -224,9 +255,11 @@ class LocalAdjacencySpec extends SparkSpec {
       allShortestPaths(tpch, s, t, dir, Nil, 3)
       rings(tpch, s, dir, Nil, 3)
       sssp(tpch, s, dir, Nil, "quantity", 3)
+      loopModes(tpch, s, dir, Nil, 3)
     }
     val labels = Seq("placed", "contains")
     for (s <- anchors.take(4)) {
+      loopModes(tpch, s, Direction.BOTH, labels, 2)
       kneighbor(tpch, s, Direction.BOTH, labels, 2)
       koutNearest(tpch, s, Direction.OUT, labels, 2)
       shortestPath(tpch, s, "part:1", Direction.BOTH, labels, 4)
@@ -239,5 +272,24 @@ class LocalAdjacencySpec extends SparkSpec {
     allShortestPaths(tpch, "customer:1", "supplier:3", Direction.BOTH, Nil, 3)
     kneighbor(tpch, "customer:1", Direction.OUT, Nil, 3, capacity = 20L)
     koutNearest(tpch, "customer:1", Direction.OUT, Nil, 2, capacity = 5L)
+  }
+
+  test("sf0.01: a top-degree BOTH anchor whose layer takes the join path") {
+    val g = TpchGraph.cached(spark, "/root/testdata/sf0.01")
+    val s = g.degrees(Direction.BOTH).orderBy(col("degree").desc, col("id"))
+      .head().getString(0)
+    val ix = LocalAdjacency.of(Traversals.adjacencyView(g, Direction.BOTH)).get
+    val sizes = Seq.newBuilder[(Int, Long)] // (layer size, visited so far)
+    ix.layers(s, 4) { (_, layer, visited) => sizes += ((layer.length, visited)); true }
+    val layers = sizes.result()
+    // the first layer over the pushdown bound; the next one expands by join
+    val wide = layers.indexWhere(_._1 > Traversals.frontierPushdownMaxIds) + 1
+    assert(wide >= 1 && wide < 4, s"$s layers $layers")
+    val depth = wide + 1
+    kneighbor(g, s, Direction.BOTH, Nil, depth)
+    koutNearest(g, s, Direction.BOTH, Nil, depth)
+    loopModes(g, s, Direction.BOTH, Nil, depth)
+    // the capacity guard trips at the wide layer, with the same count
+    kneighbor(g, s, Direction.BOTH, Nil, depth, capacity = layers(wide - 1)._2 - 1)
   }
 }

@@ -246,6 +246,17 @@ class PathTraversalSpec extends SparkSpec {
     assert(m(("person:peter", "person:vadas")) === 3L)
   }
 
+  test("multiNodeShortestDist follows OUT and IN edges only") {
+    // marko -knows-> josh; marko and josh -created-> lop
+    def dists(dir: Direction.Value): Set[(String, String, Long)] =
+      PathTraversals.multiNodeShortestDist(modern,
+        Seq("person:marko", "person:josh", "software:lop"), dir, Nil, 3)
+        .as[(String, String, Long)].collect().toSet
+    assert(dists(Direction.OUT) === Set(("person:josh", "software:lop", 1L),
+      ("person:marko", "software:lop", 1L)))
+    assert(dists(Direction.IN) === Set(("person:josh", "person:marko", 1L)))
+  }
+
   test("crosspoints of marko and peter forward trees") {
     val c = PathTraversals.crosspoints(modern, Seq("person:marko", "person:peter"),
       Direction.OUT, Nil, 2)
