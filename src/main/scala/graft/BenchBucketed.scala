@@ -12,27 +12,16 @@ import org.apache.spark.sql.functions._
   * while a `bucketBy(src)` catalog table is already partitioned on the
   * join key — only the (small) frontier side ever moves.
   *
-  * StoreAndPlansSpec proves the one-Exchange plan shape; this main turns
+  * StoreAndPlansSpec proves the one-Exchange plan shape; this tool turns
   * it into wall-clock numbers for EXPLAINS.md.
   *
-  * Usage: runMain graft.BenchBucketed [sfDir] [hops] [buckets]
+  * Usage: runMain graft.Tools bench-bucketed [sfDir] [hops] [buckets]
   */
 object BenchBucketed {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val hops = if (args.length > 1) args(1).toInt else 4
-    val buckets = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val hops = args.lift(1).fold(4)(_.toInt)
+    val buckets = args.lift(2).fold(32)(_.toInt)
 
     val g = graft.core.TpchGraph.build(spark, sfDir)
     val edgeCols = g.edges.select(col("src"), col("dst"))
@@ -77,6 +66,5 @@ object BenchBucketed {
     println(f"""{"metric":"bucketed_frontier_join","sf":"$sfDir","hops":$hops,""" +
       f""""plain_sec":$tPlain%.2f,"bucketed_sec":$tBucketed%.2f,""" +
       f""""frontier_rows":$nPlain,"speedup":${tPlain / tBucketed}%.2f}""")
-    spark.stop()
   }
 }

@@ -23,23 +23,17 @@ import org.apache.spark.sql.functions._
   * broadcast semi-joins); super-linear growth or an OOM is the cliff.
   * Results are copied into EXPLAINS.md.
   *
-  * Usage: runMain graft.DocScaleSmoke [copies=10] */
+  * Usage: runMain graft.Tools doc-scale-smoke [copies=10] [only] */
 object DocScaleSmoke {
 
-  def main(args: Array[String]): Unit = {
-    val copies = if (args.nonEmpty) args(0).toInt else 10
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val copies = args.headOption.fold(10)(_.toInt)
+    // optional comma-separated operator-name SUBSTRINGS (e.g. covariance,knn)
+    // — looser than scale-smoke's exact set membership, because names here
+    // carry annotations
+    val only = args.lift(1).map(_.split(",").toSet)
     val sfDir = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val docs0 = core.Tables.documents(spark, sfDir)
     val emb0 = core.Tables.embeddings(spark, sfDir)
@@ -59,12 +53,12 @@ object DocScaleSmoke {
     // single-task (the first run of this smoke measured exactly that:
     // 1x and 10x "scaled" 1.0x because parallelism grew with the data)
     val dir = s"/tmp/graft_docscale$copies"
-    docCopy(0).repartition(cpus.toInt).write.mode("overwrite").parquet(s"$dir/docs1")
+    docCopy(0).repartition(cpus).write.mode("overwrite").parquet(s"$dir/docs1")
     (0 until copies).map(docCopy).reduce(_ unionByName _)
-      .repartition(cpus.toInt).write.mode("overwrite").parquet(s"$dir/docsN")
-    embCopy(0).repartition(cpus.toInt).write.mode("overwrite").parquet(s"$dir/emb1")
+      .repartition(cpus).write.mode("overwrite").parquet(s"$dir/docsN")
+    embCopy(0).repartition(cpus).write.mode("overwrite").parquet(s"$dir/emb1")
     (0 until copies).map(embCopy).reduce(_ unionByName _)
-      .repartition(cpus.toInt).write.mode("overwrite").parquet(s"$dir/embN")
+      .repartition(cpus).write.mode("overwrite").parquet(s"$dir/embN")
     val (d1, dN) = (spark.read.parquet(s"$dir/docs1"), spark.read.parquet(s"$dir/docsN"))
     val (e1, eN) = (spark.read.parquet(s"$dir/emb1"), spark.read.parquet(s"$dir/embN"))
 
@@ -85,10 +79,6 @@ object DocScaleSmoke {
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    // dev iteration: SPARK_GRAFT_SMOKE_ONLY=covariance,knn runs a subset
-    // (SUBSTRING match on operator name — looser than ScaleSmoke's exact
-    // set membership, because names here carry annotations)
-    val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY").map(_.split(",").toSet)
     def run(name: String, f: (DataFrame, DataFrame) => DataFrame): Unit = {
       if (!only.forall(_.exists(name.contains))) return
       val t1 = time(s"$name 1x")(f(d1, e1).count())
@@ -199,6 +189,5 @@ object DocScaleSmoke {
     results.foreach { case (k, (a, b)) =>
       println(f"[docscale] | $k | $a%.2f s | $b%.2f s | ${b / a}%.1fx |")
     }
-    spark.stop()
   }
 }

@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan audit: `.explain("formatted")` evidence for the scale claims —
   * pushed filters, pruned read schemas, broadcast placement, codegen spans.
-  * `runMain graft.Explain [outFile]` writes EXPLAINS.md. */
+  * `runMain graft.Tools explain [outFile]` writes EXPLAINS.md. */
 object Explain {
 
   // representative shapes: scan pushdown, broadcast frontier join, window
@@ -82,7 +82,7 @@ object Explain {
       |(job-floor × AQE stages), both better than r4 at 10× scale per the
       |smoke below.
       |
-      |## 10× scale-cliff smoke (runMain graft.ScaleSmoke 10)
+      |## 10× scale-cliff smoke (runMain graft.Tools scale-smoke 10)
       |
       |Direct evidence for the "survives a scale-up" claim beyond plan
       |reading: the sf0.1 graph replicated into 10 disjoint id-suffixed
@@ -163,11 +163,11 @@ object Explain {
       |maintained by hand. Symmetric (BOTH) views only — enforced: the
       |one-sided landmark legs don't bound d(s,t) on a directed view.
       |
-      |## 30× stretch smoke (runMain graft.ScaleSmoke 30, round-10 HEAD)
+      |## 30× stretch smoke (runMain graft.Tools scale-smoke 30, round-10 HEAD)
       |
       |One more tier on the three heaviest multi-stage operators — the
       |"does the 10× trend hold" check before anyone claims 100×
-      |(SPARK_GRAFT_SMOKE_ONLY=ktruss,assort,slpa; 19.8M-edge copies):
+      |(subset ktruss,assort,slpa; 19.8M-edge copies):
       |
       |    operator        1x        30x       ratio   per-copy
       |    assortativity    3.42 s    81.24 s  23.8x   0.79
@@ -181,7 +181,7 @@ object Explain {
       |growth, not a cliff (a cluster sizes partitions down; local[32] holds
       |the partition count at 32).
       |
-      |## Bucketed edge store — measured end-to-end (runMain graft.BenchBucketed)
+      |## Bucketed edge store — measured end-to-end (runMain graft.Tools bench-bucketed)
       |
       |The 100 TB workload cannot pin its edge table in memory, so every BFS
       |hop re-reads the store. `bucketBy(src)` makes the edge side of each
@@ -207,7 +207,7 @@ object Explain {
       |rounds (plain min-label would take 64); short-diameter graphs (the
       |TPC-H projection) converge before round 3 and pay nothing.
       |
-      |## 10× doc-pipeline scale smoke (runMain graft.DocScaleSmoke 10)
+      |## 10× doc-pipeline scale smoke (runMain graft.Tools doc-scale-smoke 10)
       |
       |The LLM-operator twin of the graph smoke above: sf0.1 documents and
       |embeddings replicated into 10 disjoint copies (50k docs — every token
@@ -264,7 +264,7 @@ object Explain {
       |boilerplate tokens thread through every document, which is what the
       |per-bucket cap (Dedup.minhashCandidates bucketCap) exists to bound.
       |
-      |## 30× doc-pipeline scale smoke (round 11 — runMain graft.DocScaleSmoke 30)
+      |## 30× doc-pipeline scale smoke (round 11 — runMain graft.Tools doc-scale-smoke 30)
       |
       |The doc side's next tier (150k docs, the graph side got its 30× in
       |round 10), same protocol, measured at the round-11 HEAD:
@@ -302,7 +302,7 @@ object Explain {
       |
       |The r10 30× graph smoke attributed assortativity's per-copy rise
       |(0.23 → 0.79) to 32 static partitions at 20M edges. Measured now
-      |with the SPARK_GRAFT_SMOKE_PARTS knob (assortativity-only, replica
+      |with a shuffle-partition override (assortativity-only, replica
       |reused, round-11 HEAD — note the r10 multiplicityView src-partition
       |fix already landed, so the baseline itself improved):
       |
@@ -378,7 +378,7 @@ object Explain {
       |A deployment writes derived artifacts once, next to the corpus;
       |`Pin.pinDerived` keeps them materialized in every mode.
       |
-      |## 30× path-family smoke (round 12 — SPARK_GRAFT_SMOKE_ONLY=ecc,rings,nrg ScaleSmoke 30)
+      |## 30× path-family smoke (round 12 — scale-smoke 30 ecc,rings,nrg)
       |
       |The r11 verdict asked the path family's heavies (the three most
       |expensive bench queries of that family) for the same measured
@@ -404,7 +404,7 @@ object Explain {
       |stays 3× under linear.
       |
       |## 30× frontend-BFS smoke (round 12 continuation —
-      |SPARK_GRAFT_SMOKE_ONLY=cyphersp,until ScaleSmoke 30)
+      |scale-smoke 30 cyphersp,until)
       |
       |The two new frontend loop shapes, same 30-copy tier:
       |
@@ -418,7 +418,7 @@ object Explain {
       |their registered queries).
       |
       |## 10× per-path-expansion smoke (round 13 —
-      |SPARK_GRAFT_SMOKE_ONLY=varlenpaths,allshortest ScaleSmoke 10)
+      |scale-smoke 10 varlenpaths,allshortest)
       |
       |The round's new exact-path shapes on the 10-copy tier:
       |
@@ -432,7 +432,7 @@ object Explain {
       |of the widest layer, no per-path shuffle.
       |
       |## 10×/30× Gremlin write-path smoke (round 15 —
-      |SPARK_GRAFT_SMOKE_ONLY=gremlinwrite ScaleSmoke {10,30})
+      |scale-smoke {10,30} gremlinwrite)
       |
       |The r14-landed Gremlin write steps (addV → addE → drop, then a full
       |edge read-back) on the replicated tiers — the write twin of the r14
@@ -451,16 +451,11 @@ object Explain {
       |cartesian or a driver collect.
       |""".stripMargin
 
-  def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "EXPLAINS.md"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val out = args.headOption.getOrElse("EXPLAINS.md")
     val d = "/root/testdata/sf0.01"
     val sb = new StringBuilder
-    sb ++= "# EXPLAINS — physical-plan audit (generated by `runMain graft.Explain`)\n\n"
+    sb ++= "# EXPLAINS — physical-plan audit (generated by `runMain graft.Tools explain`)\n\n"
     sb ++= "Per query: the `.explain(\"formatted\")` evidence lines that carry the\n"
     sb ++= "scale argument — `PushedFilters`/`ReadSchema` (scan does minimal I/O),\n"
     sb ++= "`BroadcastExchange` placement (small side broadcast, big side never\n"
@@ -604,6 +599,5 @@ object Explain {
     if (flags.nonEmpty) sb ++= s"\n## RED FLAGS\n\n${flags.mkString("\n")}\n"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"[explain] wrote $out (${audited.size} curated plans, ${sweep.size} swept, ${sweepFlags.size + flags.size} flags)")
-    spark.stop()
   }
 }

@@ -17,7 +17,7 @@ import graft.traverse.{PathTraversals, SimilarityTraversals, Traversals}
   * growing. A super-linear move or an OOM here is the scale cliff the plan
   * audit can't see. Results are hand-copied into EXPLAINS.md's epilogue.
   *
-  * Usage: runMain graft.ScaleSmoke [copies=10] */
+  * Usage: runMain graft.Tools scale-smoke [copies=10] [only] */
 object ScaleSmoke {
 
   private def relabel(df: DataFrame, cols: Seq[String], i: Int): DataFrame =
@@ -26,41 +26,22 @@ object ScaleSmoke {
   private def replicate(df: DataFrame, cols: Seq[String], n: Int): DataFrame =
     (0 until n).map(relabel(df, cols, _)).reduce(_ unionByName _)
 
-  def main(args: Array[String]): Unit = {
-    val copies = if (args.nonEmpty) args(0).toInt else 10
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val copies = args.headOption.fold(10)(_.toInt)
+    // optional comma-separated subset of operator tags (e.g. spt,wpath)
+    val only = args.lift(1).map(_.split(",").toSet)
+    def wanted(tag: String): Boolean = only.forall(_.contains(tag))
     val sfDir = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SMOKE_PARTS overrides the shuffle-partition count so the
-    // N×-scale cache-tier boundary can be MEASURED against the knob a
-    // cluster deployment would turn (32 static partitions at 20M edges put
-    // ~600MB in each task's working set — the r10 assortativity per-copy
-    // rise): at N× a deployment raises partitions ∝ data, local[32] keeps
-    // task parallelism at 32 either way
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SMOKE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val g1 = TpchGraph.cached(spark, sfDir)
 
     // materialize the N× graph to parquet so its scans cost what the bench's
     // scans cost (not an in-memory lineage of the 1× plan)
     val dir = s"/tmp/graft_scale$copies"
-    // dev iteration: SPARK_GRAFT_SMOKE_REUSE=1 keeps an existing replica dir
-    if (!(sys.env.get("SPARK_GRAFT_SMOKE_REUSE").contains("1") &&
-          new java.io.File(s"$dir/edges/_SUCCESS").exists())) {
-      replicate(g1.vertices, Seq("id"), copies)
-        .write.mode("overwrite").parquet(s"$dir/vertices")
-      replicate(g1.edges, Seq("src", "dst"), copies)
-        .write.mode("overwrite").parquet(s"$dir/edges")
-    }
+    replicate(g1.vertices, Seq("id"), copies)
+      .write.mode("overwrite").parquet(s"$dir/vertices")
+    replicate(g1.edges, Seq("src", "dst"), copies)
+      .write.mode("overwrite").parquet(s"$dir/edges")
     val gN = PropertyGraph(
       spark.read.parquet(s"$dir/vertices"),
       spark.read.parquet(s"$dir/edges"), TpchGraph.schema)
@@ -97,21 +78,10 @@ object ScaleSmoke {
       sec
     }
 
-    // per-graph "load phase" (same views Bench.warmup pins), timed separately
+    // per-graph "load phase" (the graph views Bench.warmup pins), timed
+    // separately so cold-pin costs do not masquerade as scale cliffs
     def warm(g: PropertyGraph, tag: String): Unit = {
-      val _ = time(s"load/pin adjacency $tag") {
-        g.vertices.count(); g.edges.count()
-        for (dir <- Seq(Direction.OUT, Direction.BOTH)) {
-          Traversals.adjacencyView(g, dir)
-          // multiplicity-preserving view (walk-counting traversals,
-          // neighborRank) — Bench.warmup pins these too
-          Traversals.multiplicityView(g, EdgeStep(dir))
-        }
-        Algorithms.pageRankViews(g)
-        // weighted-SSSP working set (Bench.warmup pins this too)
-        PathTraversals.weightedEdgeView(g, Direction.BOTH, Nil, "quantity")
-        0L
-      }
+      val _ = time(s"load/pin adjacency $tag") { Bench.pinGraphViews(g); 0L }
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
@@ -120,24 +90,8 @@ object ScaleSmoke {
       val ts = inputs.map { case (tag, g) => time(s"$name $tag")(f(g).count()) }
       results(name) = (ts.head, ts.last)
     }
-    // dev iteration: SPARK_GRAFT_SMOKE_ONLY=spt,wpath runs a subset
-    val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY").map(_.split(",").toSet)
-    def wanted(tag: String): Boolean = only.forall(_.contains(tag))
-
     val suf = "#0"
     warm(g1, "1x"); warm(gN, s"${copies}x")
-    if (sys.env.get("GRAFT_TRACE_DEBUG").contains("1"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(-1L)
-          if (wall > 300) System.err.println(
-            s"[stage] id=${si.stageId} tasks=${si.numTasks} wall=${wall}ms " +
-            s"taskTime=${si.taskMetrics.executorRunTime}ms gc=${si.taskMetrics.jvmGCTime}ms " +
-            s"${si.name.take(80)}")
-        }
-      })
     if (wanted("pagerank")) run("pagerank", g => Algorithms.pageRank(g, alpha = 0.85, iterations = 3),
       Seq("1x" -> g1, s"${copies}x" -> gN))
     if (wanted("wcc")) results("wcc") = (
@@ -316,6 +270,5 @@ object ScaleSmoke {
     results.foreach { case (k, (a, b)) =>
       println(f"[scale] | $k | $a%.2f s | $b%.2f s | ${b / a}%.1fx |")
     }
-    spark.stop()
   }
 }

@@ -1,26 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (dev iteration;
-    // the driver always passes exactly two args → full suite)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+  val usage = "usage: graft.Verify <sfDir> <outDir> [q_a,q_b,...]"
+
+  /** (sfDir, outDir, optional query-name filter), or the usage line. The
+    * optional 3rd arg is a comma-separated filter for dev iteration; two
+    * args run the full suite. */
+  def parseArgs(args: Array[String]): Either[String, (String, String, Option[Set[String]])] =
+    args match {
+      case Array(s, o)    => Right((s, o, None))
+      case Array(s, o, f) => Right((s, o, Some(f.split(",").toSet)))
+      case _              => Left(usage)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir, only) = parseArgs(args) match {
+      case Right(parsed) => parsed
+      case Left(msg) => System.err.println(msg); sys.exit(2)
+    }
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -18,9 +18,4 @@ object QueryDef {
   def q(name: String, oracle: String, bench: Boolean = false)(
       impl: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, impl, Some(oracle), bench)
-
-  /** non-SQL-expressible → driver records rows-only check */
-  def qNoOracle(name: String, bench: Boolean = false)(
-      impl: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, impl, None, bench)
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Automated per-mover A/B adjudication (r13 verdict ask #10, the r05/r13
 playbook made standard): find queries whose per-query min regressed >=
-threshold between two BENCH_FULL jsons, run ONE dedicated BenchOne batch on
+threshold between two BENCH_FULL jsons, run ONE dedicated `graft.Tools bench-one` batch on
 HEAD, and append a verdict table to BENCH_NOTES.md. A mover whose A/B min
 recovers the old time is host noise; one that reproduces the regressed time
 is engine-attributed and needs a look.
@@ -30,9 +30,9 @@ def main():
         print(f"no movers >= {thresh:.2f}x (with >=0.3s absolute delta)")
         return
     names = ",".join(q for q, _, _ in movers)
-    print(f"movers: {names}; running BenchOne reps={reps} at sf0.1")
+    print(f"movers: {names}; running bench-one reps={reps} at sf0.1")
     out = subprocess.run(
-        ["sbt", "-batch", f"runMain graft.BenchOne {names} /root/testdata/sf0.1 {reps}"],
+        ["sbt", "-batch", f"runMain graft.Tools bench-one {names} /root/testdata/sf0.1 {reps}"],
         capture_output=True, text=True).stdout
     walls = {}
     for m in re.finditer(r"\[benchone\] rep=(\d+) (\S+) rows=\d+ total=([\d.]+)s", out):
@@ -47,7 +47,7 @@ def main():
         ws = walls.get(q, [])
         ab = min(ws) if ws else float("nan")
         if not ws:
-            v = "no-data (BenchOne produced no line)"
+            v = "no-data (bench-one produced no line)"
         elif ab <= o * 1.2:
             v = "HOST NOISE — A/B recovers the old time"
         elif ab >= n * 0.8:
