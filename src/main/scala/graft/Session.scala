@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** Core count from `SPARK_GRAFT_CPUS` (default 4). */
-  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+  private def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
   /** `local[cpus]` with one shuffle partition per core and AQE on. AQE
     * coalesces by size (`parallelismFirst=false`, 8m advisory): iterative
     * graph queries shuffle tiny frontiers, and without it every such
-    * micro-shuffle keeps `cpus` tasks of pure scheduling overhead. */
+    * micro-shuffle keeps `cpus` tasks of pure scheduling overhead. The
+    * entry points take `cpus` from the environment; the test suites pin it. */
   def local(cpus: Int = envCpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

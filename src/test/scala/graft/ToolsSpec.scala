@@ -6,8 +6,7 @@ package graft
 class ToolsSpec extends SparkSpec {
 
   test("the shared test session carries the factory's settings") {
-    val cpus = Session.envCpus
-    assert(Session.local() eq spark)
+    val cpus = SparkSpec.cpus
     assert(spark.sparkContext.master === s"local[$cpus]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === cpus.toString)
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")

@@ -7,9 +7,13 @@ recovers the old time is host noise; one that reproduces the regressed time
 is engine-attributed and needs a look.
 
 Usage: movers_ab.py OLD_FULL.json NEW_FULL.json [thresh=1.3] [reps=3]
+
+The A/B runs at SPARK_GRAFT_CPUS cores, 32 when unset: the BENCH_FULL
+campaigns it is compared against ran at local[32].
 """
 import datetime
 import json
+import os
 import re
 import subprocess
 import sys
@@ -30,16 +34,18 @@ def main():
         print(f"no movers >= {thresh:.2f}x (with >=0.3s absolute delta)")
         return
     names = ",".join(q for q, _, _ in movers)
-    print(f"movers: {names}; running bench-one reps={reps} at sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    print(f"movers: {names}; running bench-one reps={reps} at sf0.1, local[{cpus}]")
     out = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Tools bench-one {names} /root/testdata/sf0.1 {reps}"],
-        capture_output=True, text=True).stdout
+        capture_output=True, text=True,
+        env={**os.environ, "SPARK_GRAFT_CPUS": cpus}).stdout
     walls = {}
     for m in re.finditer(r"\[benchone\] rep=(\d+) (\S+) rows=\d+ total=([\d.]+)s", out):
         walls.setdefault(m.group(2), []).append(float(m.group(3)))
     lines = [
         f"\n## Automated movers A/B ({datetime.date.today()}, "
-        f"thresh {thresh}x, reps {reps}, {old_p} -> {new_p})\n",
+        f"thresh {thresh}x, reps {reps}, local[{cpus}], {old_p} -> {new_p})\n",
         "| query | old min | new min | A/B min | verdict |",
         "|---|---|---|---|---|",
     ]
