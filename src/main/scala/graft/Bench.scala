@@ -24,7 +24,9 @@ object Bench {
       Traversals.multiplicityView(g, EdgeStep(dir))
     }
     // the labeled (src, label, dst) adjacency the degree-capped kout/
-    // kneighbor family windows over (truncation needs the label sort key)
+    // kneighbor family windows over (truncation needs the label sort key);
+    // the OUT view's driver index answers the neighbor-set traversers and
+    // personalRank
     Traversals.labeledAdjacency(g, Direction.OUT, Nil)
     Traversals.labeledAdjacency(g, Direction.BOTH, Nil)
     // the co-partitioned edge+degree view PageRank rounds plan against

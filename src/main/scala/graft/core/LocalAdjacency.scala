@@ -4,20 +4,24 @@ import org.apache.spark.sql.DataFrame
 
 /** A compressed adjacency index held on the driver: vertex ids interned to
   * ints, one offsets array and one neighbor array (CSR), plus a weight
-  * array for weighted views. It is the in-memory twin of a pinned edge view
-  * `(src, dst[, w])` — the reference's per-vertex adjacency lookups
+  * array for weighted views and a per-edge label id (into interned label
+  * names) for labeled views. It is the in-memory twin of a pinned edge view
+  * `(src, dst[, w][, label])` — the reference's per-vertex adjacency lookups
   * (`HugeTraverser.edgesOfVertex`, `OltpTraverser`) with no Spark job per
   * hop. Rows keep the view's multiplicity, so a non-distinct view indexes
-  * its parallel edges.
+  * its parallel edges. The IN side of an OUT view is its [[transposed]]
+  * index, built on the driver on first use.
   *
   * Indexes are built by [[register]] and found by [[of]], both keyed by the
   * identity of the pinned frame; [[Pin.clear]] drops them all. */
 final class LocalAdjacency private (
     ids: Array[String],
     index: java.util.HashMap[String, Integer],
-    offsets: Array[Int],
-    nbrs: Array[Int],
-    weights: Array[Double]) {
+    private val offsets: Array[Int],
+    private val nbrs: Array[Int],
+    weights: Array[Double],
+    labelNames: Array[String],
+    private val labels: Array[Int]) {
 
   def vertexCount: Int = ids.length
   def edgeCount: Int = nbrs.length
@@ -35,6 +39,69 @@ final class LocalAdjacency private (
   def until(v: Int): Int = offsets(v + 1)
   def nbr(e: Int): Int = nbrs(e)
   def weight(e: Int): Double = weights(e)
+
+  /** Per label id, whether `requested` admits it; every label when
+    * `requested` is empty. Only for a labeled view. */
+  def labelMask(requested: Seq[String]): Array[Boolean] =
+    labelNames.map(l => requested.isEmpty || requested.contains(l))
+
+  /** The reversed index: every edge `dst → src`, with the same interned ids,
+    * weights and labels. Each vertex's IN list is ordered by source id. */
+  lazy val transposed: LocalAdjacency = {
+    val n = ids.length
+    val m = nbrs.length
+    val off = new Array[Int](n + 1)
+    nbrs.foreach(d => off(d + 1) += 1)
+    var v = 0
+    while (v < n) { off(v + 1) += off(v); v += 1 }
+    val fill = java.util.Arrays.copyOf(off, n)
+    val rev = new Array[Int](m)
+    val w = if (weights == null) null else new Array[Double](m)
+    val l = if (labels == null) null else new Array[Int](m)
+    v = 0
+    while (v < n) {
+      var e = offsets(v)
+      while (e < offsets(v + 1)) {
+        val at = fill(nbrs(e))
+        rev(at) = v
+        if (w != null) w(at) = weights(e)
+        if (l != null) l(at) = labels(e)
+        fill(nbrs(e)) = at + 1
+        e += 1
+      }
+      v += 1
+    }
+    new LocalAdjacency(ids, index, off, rev, w, labelNames, l)
+  }
+
+  /** Hands `f` the neighbor of every edge of `v` in direction `dir` whose
+    * label `mask` admits, parallel edges each time: for BOTH the OUT edges,
+    * then the IN edges of the [[transposed]] index, so a self-loop counts
+    * twice (the union `PropertyGraph.bothEdges` plans). */
+  def foreachEdge(v: Int, dir: Direction.Value, mask: Array[Boolean])(f: Int => Unit): Unit =
+    if (v >= 0) {
+      def scan(ix: LocalAdjacency): Unit = {
+        var e = ix.offsets(v)
+        while (e < ix.offsets(v + 1)) { if (mask(ix.labels(e))) f(ix.nbrs(e)); e += 1 }
+      }
+      if (dir != Direction.IN) scan(this)
+      if (dir != Direction.OUT) scan(transposed)
+    }
+
+  /** Edges [[foreachEdge]] visits. */
+  def degree(v: Int, dir: Direction.Value, mask: Array[Boolean]): Int = {
+    var n = 0
+    foreachEdge(v, dir, mask)(_ => n += 1)
+    n
+  }
+
+  /** Distinct neighbors of `v` over the edges [[foreachEdge]] visits, in
+    * ascending interned id. */
+  def neighborSet(v: Int, dir: Direction.Value, mask: Array[Boolean]): Array[Int] = {
+    val out = Array.newBuilder[Int]
+    foreachEdge(v, dir, mask)(out += _)
+    out.result().sorted.distinct
+  }
 
   /** Edges `src → dst` in the view (parallel edges each count). */
   def multiplicity(src: String, dst: String): Int = {
@@ -82,7 +149,8 @@ object LocalAdjacency {
 
   /** One index per pinned view, built at most once: concurrent callers of
     * [[register]] for the same view wait on the cell's lazy build. `None`
-    * when the view holds a null endpoint, which no join would match. */
+    * when the view holds a null endpoint, which no join would match, or a
+    * null label, which no label filter would match. */
   private final class Cell(view: DataFrame) {
     lazy val index: Option[LocalAdjacency] = build(view)
   }
@@ -92,7 +160,7 @@ object LocalAdjacency {
 
   Pin.onClear(() => byView.synchronized(byView.clear()))
 
-  /** Builds (once) the index of a pinned view `(src, dst[, w])`. */
+  /** Builds (once) the index of a pinned view `(src, dst[, w][, label])`. */
   def register(view: DataFrame): Unit = {
     val cell = byView.synchronized {
       var c = byView.get(view)
@@ -110,27 +178,25 @@ object LocalAdjacency {
     * and lays it out as CSR: counting sort of the rows by interned src. */
   private def build(view: DataFrame): Option[LocalAdjacency] = {
     val weighted = view.columns.contains("w")
-    val cols = Seq("src", "dst") ++ (if (weighted) Seq("w") else Nil)
+    val labeled = view.columns.contains("label")
+    val cols = Seq("src", "dst") ++ (if (weighted) Seq("w") else Nil) ++
+      (if (labeled) Seq("label") else Nil)
     val rows = view.select(cols.map(org.apache.spark.sql.functions.col): _*)
       .queryExecution.executedPlan.executeCollect()
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val index = new java.util.HashMap[String, Integer]()
-    val ids = Array.newBuilder[String]
-    def intern(s: String): Int = {
-      val i = index.get(s)
-      if (i != null) i.intValue
-      else { val n = index.size; index.put(s, n); ids += s; n }
-    }
+    val labelAt = cols.length - 1
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || (labeled && r.isNullAt(labelAt))))
+      return None
+    val ids = new Interner
     val m = rows.length
     val src = new Array[Int](m)
     val dst = new Array[Int](m)
     var k = 0
     while (k < m) {
-      src(k) = intern(rows(k).getUTF8String(0).toString)
-      dst(k) = intern(rows(k).getUTF8String(1).toString)
+      src(k) = ids(rows(k).getUTF8String(0).toString)
+      dst(k) = ids(rows(k).getUTF8String(1).toString)
       k += 1
     }
-    val n = index.size
+    val n = ids.index.size
     val offsets = new Array[Int](n + 1)
     src.foreach(s => offsets(s + 1) += 1)
     var v = 0
@@ -138,14 +204,30 @@ object LocalAdjacency {
     val fill = java.util.Arrays.copyOf(offsets, n)
     val nbrs = new Array[Int](m)
     val weights = if (weighted) new Array[Double](m) else null
+    val labelIds = new Interner
+    val labels = if (labeled) new Array[Int](m) else null
     k = 0
     while (k < m) {
       val at = fill(src(k))
       nbrs(at) = dst(k)
       if (weighted) weights(at) = rows(k).getDouble(2)
+      if (labeled) labels(at) = labelIds(rows(k).getUTF8String(labelAt).toString)
       fill(src(k)) = at + 1
       k += 1
     }
-    Some(new LocalAdjacency(ids.result(), index, offsets, nbrs, weights))
+    Some(new LocalAdjacency(ids.result(), ids.index, offsets, nbrs, weights,
+      if (labeled) labelIds.result() else null, labels))
+  }
+
+  /** Strings numbered in first-seen order. */
+  private final class Interner {
+    val index = new java.util.HashMap[String, Integer]()
+    private val names = Array.newBuilder[String]
+    def apply(s: String): Int = {
+      val i = index.get(s)
+      if (i != null) i.intValue
+      else { val n = index.size; index.put(s, n); names += s; n }
+    }
+    def result(): Array[String] = names.result()
   }
 }

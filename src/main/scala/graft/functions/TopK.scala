@@ -39,8 +39,7 @@ object TopK {
     * formulation only for groups with fewer than k non-null-ord rows —
     * callers that must surface such rows should coalesce ord first. */
   def registerKernels(df: org.apache.spark.sql.DataFrame): Unit = {
-    val reg = df.sparkSession.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("top_k_by", es => {
+    SessionFunctions.registerOnce(df.sparkSession, "top_k_by") { es =>
       val k = es(2) match {
         case Literal(v, _) => v.toString.toInt
         case other => throw new IllegalArgumentException(
@@ -48,8 +47,8 @@ object TopK {
       }
       TopKByAgg(Cast(es.head, DoubleType), Cast(es(1), LongType), k)
         .toAggregateExpression()
-    }, "built-in")
-    reg.createOrReplaceTempFunction("top_k_rows", es => {
+    }
+    SessionFunctions.registerOnce(df.sparkSession, "top_k_rows") { es =>
       val k = es(3) match {
         case Literal(v, _) => v.toString.toInt
         case other => throw new IllegalArgumentException(
@@ -57,7 +56,7 @@ object TopK {
       }
       TopKRowsAgg(Cast(es.head, DoubleType), es(1), es(2), k)
         .toAggregateExpression()
-    }, "built-in")
+    }
   }
 
   /** Top-k `(ord, payload)` pairs per group, ranked (ord DESC, payload

@@ -60,11 +60,8 @@ object UnicodeFunctions {
   /** Register `nfc_normalize` / `strip_accents` for this session
     * (idempotent). */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalizeExpr(es.head), "built-in")
-    reg.createOrReplaceTempFunction("strip_accents",
-      es => StripAccentsExpr(es.head), "built-in")
+    SessionFunctions.registerOnce(spark, "nfc_normalize")(es => NfcNormalizeExpr(es.head))
+    SessionFunctions.registerOnce(spark, "strip_accents")(es => StripAccentsExpr(es.head))
   }
 
   def nfcNormalize(c: Column): Column = call_function("nfc_normalize", c)

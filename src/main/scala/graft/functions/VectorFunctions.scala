@@ -122,12 +122,10 @@ object VectorFunctions {
 
   /** Register `cosine_sim` / `dot_product` for this session (idempotent). */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSimExpr(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProductExpr(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("upper_tri_products6",
-      es => UpperTriProducts6Expr(es.head,
-        es(1).eval().asInstanceOf[Int]), "built-in")
+    SessionFunctions.registerOnce(spark, "cosine_sim")(es => CosineSimExpr(es.head, es(1)))
+    SessionFunctions.registerOnce(spark, "dot_product")(es => DotProductExpr(es.head, es(1)))
+    SessionFunctions.registerOnce(spark, "upper_tri_products6")(
+      es => UpperTriProducts6Expr(es.head, es(1).eval().asInstanceOf[Int]))
   }
 
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)

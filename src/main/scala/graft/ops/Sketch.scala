@@ -44,8 +44,8 @@ object Sketch {
     * Columns are built from registered function names, not raw
     * expressions). Idempotent. */
   def registerKernels(df: org.apache.spark.sql.DataFrame): Unit = {
-    val reg = df.sparkSession.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("kmv_distinct", es => {
+    import graft.functions.SessionFunctions.registerOnce
+    registerOnce(df.sparkSession, "kmv_distinct") { es =>
       val k = es(1) match {
         case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
           v.toString.toInt
@@ -53,9 +53,8 @@ object Sketch {
           s"kmv_distinct k must be a literal, got $other")
       }
       KmvSketchAgg(es.head, k).toAggregateExpression()
-    }, "built-in")
-    reg.createOrReplaceTempFunction("hll_distinct", es =>
-      HllSketchAgg(es.head).toAggregateExpression(), "built-in")
+    }
+    registerOnce(df.sparkSession, "hll_distinct")(es => HllSketchAgg(es.head).toAggregateExpression())
   }
 
   /** KMV distinct-count estimate of `hashCol` (a [[hash60]]-hashed value)

@@ -16,14 +16,19 @@ import graft.core._
   *    executor), the pin also builds a [[graft.core.LocalAdjacency]] and
   *    `kneighbor`/`koutNearest` (degree < 0), `shortestPathDist` and
   *    `PathTraversals.allShortestPaths`/`rings`/`weightedSssp` walk it on
-  *    the driver and return a local relation — no Spark job;
+  *    the driver and return a local relation — no Spark job. The labeled
+  *    OUT view's index carries per-edge labels and is transposed on the
+  *    driver for IN/BOTH; `neighbors`, `sameNeighbors(Batch)`,
+  *    `jaccardSimilarity`, `adamicAdar`/`resourceAllocation` and
+  *    `personalRank` answer from it under a label mask ([[labeledIndex]]);
   *  - Spark join: otherwise (views over the bound, `SPARK_GRAFT_NOPIN=1`,
-  *    `SPARK_GRAFT_BUCKETED=1`, and every other traverser) a frontier is a
-  *    DataFrame and one BFS layer is ONE distributed hash join of the
-  *    frontier against the edge table: batching, parallelism and memory
-  *    arbitration all come from Spark. At 100 TB the frontier join shuffles
-  *    on `src`/`id`; a graph stored bucketed by `src` co-locates every
-  *    layer with zero shuffle on the edges side.
+  *    `SPARK_GRAFT_BUCKETED=1`, a SUB label on a `sub_label` frame, and
+  *    every other traverser) a frontier is a DataFrame and one BFS layer
+  *    is ONE distributed hash join of the frontier against the edge table:
+  *    batching, parallelism and memory arbitration all come from Spark. At
+  *    100 TB the frontier join shuffles on `src`/`id`; a graph stored
+  *    bucketed by `src` co-locates every layer with zero shuffle on the
+  *    edges side.
   *
   * The kneighbor/kout family runs on one Spark layer loop, [[layerLoop]]
   * (the reference drives them all from `OltpTraverser.traverseIdsByBfs`):
@@ -147,12 +152,28 @@ object Traversals {
 
   /** Labeled adjacency (src, label, dst) pinned per (dir, labels) — the
     * base relation per-hop degree truncation windows over. Clustered by src
-    * within partitions for the same cache-batch pruning as adjacencyView. */
+    * within partitions for the same cache-batch pruning as adjacencyView.
+    * Only the OUT view of every label is indexed: its transpose serves IN
+    * and BOTH, so the twice-as-large BOTH view is never collected. */
   private[graft] def labeledAdjacency(g: PropertyGraph, dir: Direction.Value,
-                                      labels: Seq[String]): DataFrame =
-    pinned(EdgeStep(dir, labels).edgesFor(g)
+                                      labels: Seq[String]): DataFrame = {
+    val view = pinned(EdgeStep(dir, labels).edgesFor(g)
       .select(col("src"), col("label"), col("dst"))
       .sortWithinPartitions(col("src")))
+    if (dir == Direction.OUT && labels.isEmpty) indexed(view) else view
+  }
+
+  /** The labeled OUT index with the mask of `labels` on it, when it can
+    * answer them: a SUB label on a frame with a `sub_label` column cannot,
+    * since the view keeps only the stored `label`. */
+  private def labeledIndex(g: PropertyGraph,
+                           labels: Seq[String]): Option[(LocalAdjacency, Array[Boolean])] = {
+    val sub = g.edges.columns.contains("sub_label") &&
+      g.schema.edgeLabels.exists(el => el.father.isDefined && labels.contains(el.name))
+    if (sub) None
+    else LocalAdjacency.of(labeledAdjacency(g, Direction.OUT, Nil))
+      .map(ix => (ix, ix.labelMask(labels)))
+  }
 
   /** Degree-capped frontier expansion: join FIRST, then truncate per vertex.
     * The per-src (label, dst)-ordered row_number is identical to
@@ -453,28 +474,64 @@ object Traversals {
   /** Distinct neighbor set of one vertex. */
   def neighbors(g: PropertyGraph, v: String, dir: Direction.Value,
                 labels: Seq[String] = Nil): DataFrame =
+    labeledIndex(g, labels) match {
+      case Some((ix, mask)) => localIds(g, ix.neighborSet(ix.idOf(v), dir, mask).map(ix.name).toSeq)
+      case None => neighborsJoin(g, v, dir, labels)
+    }
+
+  /** [[neighbors]] as a Spark scan. */
+  private[graft] def neighborsJoin(g: PropertyGraph, v: String, dir: Direction.Value,
+                                   labels: Seq[String]): DataFrame =
     EdgeStep(dir, labels).edgesFor(g).filter(col("src") === v)
       .select(col("dst").as("id")).distinct()
+
+  /** Members of the ascending array `a` that the ascending array `b` holds. */
+  private def intersectSorted(a: Array[Int], b: Array[Int]): Array[Int] =
+    a.filter(java.util.Arrays.binarySearch(b, _) >= 0)
+
+  /** Interned ids of the neighbors every vertex of `vs` shares, ascending. */
+  private def commonNeighbors(ix: LocalAdjacency, mask: Array[Boolean], vs: Seq[String],
+                              dir: Direction.Value): Array[Int] =
+    vs.map(v => ix.neighborSet(ix.idOf(v), dir, mask)).reduce(intersectSorted)
 
   /** Common neighbors of two vertices (reference `SameNeighborTraverser:38`). */
   def sameNeighbors(g: PropertyGraph, a: String, b: String, dir: Direction.Value,
                     labels: Seq[String] = Nil): DataFrame =
-    neighbors(g, a, dir, labels).intersect(neighbors(g, b, dir, labels))
+    labeledIndex(g, labels) match {
+      case Some((ix, mask)) =>
+        localIds(g, commonNeighbors(ix, mask, Seq(a, b), dir).map(ix.name).toSeq)
+      case None => sameNeighborsJoin(g, a, b, dir, labels)
+    }
+
+  /** [[sameNeighbors]] as a Spark set intersection. */
+  private[graft] def sameNeighborsJoin(g: PropertyGraph, a: String, b: String,
+                                       dir: Direction.Value, labels: Seq[String]): DataFrame =
+    neighborsJoin(g, a, dir, labels).intersect(neighborsJoin(g, b, dir, labels))
 
   /** Common neighbors of N ≥ 2 vertices (reference
-    * `SameNeighborTraverser.sameNeighbors:68` — iterated set intersection).
-    * One aggregation instead of N−1 set intersections: a neighbor is common
-    * iff its distinct-source count over the N sources equals N. */
+    * `SameNeighborTraverser.sameNeighbors:68` — iterated set intersection). */
   def sameNeighborsBatch(g: PropertyGraph, vertexIds: Seq[String],
                          dir: Direction.Value, labels: Seq[String] = Nil): DataFrame = {
     require(vertexIds.size >= 2, "vertex_list size can't be less than 2")
+    labeledIndex(g, labels) match {
+      case Some((ix, mask)) =>
+        localIds(g, commonNeighbors(ix, mask, vertexIds, dir).map(ix.name).toSeq)
+      case None => sameNeighborsBatchJoin(g, vertexIds, dir, labels)
+    }
+  }
+
+  /** [[sameNeighborsBatch]] as one aggregation instead of N−1 set
+    * intersections: a neighbor is common iff its distinct-source count
+    * equals the number of distinct sources. */
+  private[graft] def sameNeighborsBatchJoin(g: PropertyGraph, vertexIds: Seq[String],
+                                            dir: Direction.Value,
+                                            labels: Seq[String]): DataFrame =
     EdgeStep(dir, labels).edgesFor(g)
       .filter(col("src").isin(vertexIds: _*))
       .select(col("src"), col("dst")).distinct()
       .groupBy(col("dst").as("id")).agg(countDistinct(col("src")).as("n"))
-      .filter(col("n") === vertexIds.size)
+      .filter(col("n") === vertexIds.distinct.size)
       .select(col("id"))
-  }
 
   /** Single shortest path WITH reconstruction, via layered parent pointers —
     * the reference's `ShortestPathRecords` machinery (SURVEY §2.12): BFS
@@ -565,13 +622,34 @@ object Traversals {
     walk.select(col("p").as("path"))
   }
 
-  /** |N(a)∩N(b)| / |N(a)∪N(b)| (reference `JaccardSimilarTraverser:48`).
-    * One distributed aggregation — side-tag the two neighbor sets, dedup by
-    * vertex, count both/any — instead of two driver count() actions. */
+  /** One local row `name` = `round(x, 9)`. */
+  private def localScore(g: PropertyGraph, name: String, x: Double): DataFrame = {
+    val spark = g.vertices.sparkSession
+    import spark.implicits._
+    Seq(x).toDF(name).select(round(col(name), 9).as(name))
+  }
+
+  /** |N(a)∩N(b)| / |N(a)∪N(b)| (reference `JaccardSimilarTraverser:48`). */
   def jaccardSimilarity(g: PropertyGraph, a: String, b: String, dir: Direction.Value,
-                        labels: Seq[String] = Nil): DataFrame = {
-    val na = neighbors(g, a, dir, labels).select(col("id"), lit(1).as("sa"), lit(0).as("sb"))
-    val nb = neighbors(g, b, dir, labels).select(col("id"), lit(0).as("sa"), lit(1).as("sb"))
+                        labels: Seq[String] = Nil): DataFrame =
+    labeledIndex(g, labels) match {
+      case Some((ix, mask)) =>
+        val na = ix.neighborSet(ix.idOf(a), dir, mask)
+        val nb = ix.neighborSet(ix.idOf(b), dir, mask)
+        val inter = intersectSorted(na, nb).length
+        val uni = na.length + nb.length - inter
+        localScore(g, "similarity", if (uni > 0) inter.toDouble / uni else 0.0)
+      case None => jaccardSimilarityJoin(g, a, b, dir, labels)
+    }
+
+  /** [[jaccardSimilarity]] as one distributed aggregation — side-tag the two
+    * neighbor sets, dedup by vertex, count both/any — instead of two driver
+    * count() actions. */
+  private[graft] def jaccardSimilarityJoin(g: PropertyGraph, a: String, b: String,
+                                           dir: Direction.Value,
+                                           labels: Seq[String]): DataFrame = {
+    val na = neighborsJoin(g, a, dir, labels).select(col("id"), lit(1).as("sa"), lit(0).as("sb"))
+    val nb = neighborsJoin(g, b, dir, labels).select(col("id"), lit(0).as("sa"), lit(1).as("sb"))
     na.unionByName(nb)
       .groupBy(col("id")).agg(max(col("sa")).as("sa"), max(col("sb")).as("sb"))
       .agg(coalesce(sum(col("sa") * col("sb")), lit(0L)).cast("double").as("inter"),
@@ -582,25 +660,57 @@ object Traversals {
 
   /** Common-neighbor link-prediction scores
     * (reference `PredictionTraverser.adamicAdar:36` / `resourceAllocation:53`):
-    * Σ over common neighbors z of 1/log(deg z) resp. 1/deg z, where deg is
-    * the BOTH-direction edge count of z restricted to `labels`. */
+    * Σ over common neighbors z of `inv(deg z)`, where deg is the
+    * BOTH-direction edge count of z restricted to `labels` — on the index,
+    * z's OUT plus transposed IN edges under the label mask. `inv` and
+    * `invCol` are the same function on the driver and in Spark. */
   private def predictionScore(g: PropertyGraph, a: String, b: String,
                               dir: Direction.Value, labels: Seq[String],
-                              inv: Column => Column): DataFrame = {
-    val common = sameNeighbors(g, a, b, dir, labels)
+                              inv: Long => Double, invCol: Column => Column): DataFrame =
+    labeledIndex(g, labels) match {
+      case Some((ix, mask)) =>
+        localScore(g, "score", commonNeighbors(ix, mask, Seq(a, b), dir)
+          .map(z => inv(ix.degree(z, Direction.BOTH, mask).toLong)).sum)
+      case None => predictionScoreJoin(g, a, b, dir, labels, invCol)
+    }
+
+  /** [[predictionScore]] joining the common neighbors to a full degree
+    * aggregation. */
+  private def predictionScoreJoin(g: PropertyGraph, a: String, b: String,
+                                  dir: Direction.Value, labels: Seq[String],
+                                  inv: Column => Column): DataFrame = {
+    val common = sameNeighborsJoin(g, a, b, dir, labels)
     val deg = g.adjacency(Direction.BOTH, labels)
       .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     common.join(deg, Seq("id"))
       .agg(round(coalesce(sum(inv(col("deg"))), lit(0.0)), 9).as("score"))
   }
 
+  /** Adamic-Adar's term; a degree-1 common neighbor (only when a = b) scores
+    * 1/ln 1 = +∞ as in the reference, where ANSI division would throw. Spark's
+    * `log` is `StrictMath.log`. */
+  private val adamicTerm: Long => Double = d => 1.0 / StrictMath.log(d.toDouble)
+  private val adamicTermCol: Column => Column =
+    d => when(d > 1, lit(1.0) / log(d)).otherwise(lit(Double.PositiveInfinity))
+
   def adamicAdar(g: PropertyGraph, a: String, b: String,
                  dir: Direction.Value = Direction.BOTH, labels: Seq[String] = Nil): DataFrame =
-    predictionScore(g, a, b, dir, labels, d => lit(1.0) / log(d))
+    predictionScore(g, a, b, dir, labels, adamicTerm, adamicTermCol)
+
+  /** [[adamicAdar]] joined against a full degree aggregation. */
+  private[graft] def adamicAdarJoin(g: PropertyGraph, a: String, b: String,
+                                    dir: Direction.Value, labels: Seq[String]): DataFrame =
+    predictionScoreJoin(g, a, b, dir, labels, adamicTermCol)
 
   def resourceAllocation(g: PropertyGraph, a: String, b: String,
                          dir: Direction.Value = Direction.BOTH, labels: Seq[String] = Nil): DataFrame =
-    predictionScore(g, a, b, dir, labels, d => lit(1.0) / d)
+    predictionScore(g, a, b, dir, labels, d => 1.0 / d, d => lit(1.0) / d)
+
+  /** [[resourceAllocation]] joined against a full degree aggregation. */
+  private[graft] def resourceAllocationJoin(g: PropertyGraph, a: String, b: String,
+                                            dir: Direction.Value,
+                                            labels: Seq[String]): DataFrame =
+    predictionScoreJoin(g, a, b, dir, labels, d => lit(1.0) / d)
 
   /** Unweighted shortest-path distance via bidirectional BFS — alternating
     * expansion of the smaller frontier with a meet join per round (reference
@@ -718,7 +828,10 @@ object Traversals {
     *    `PersonalRankTraverser.java:50,81-86,164-168`: the out/in seed sets
     *    ARE the two vertex-label sides of the bipartite edge label —
     *    `getStartDirection:139-156` enforces the two endpoint labels
-    *    differ — so a vertex-label equality filter is the set-free twin).
+    *    differ — so a vertex-label equality filter is the set-free twin);
+    *    a source that is no vertex has no side, and answers empty;
+    *  - `maxDepth` < 1 answers empty: only the root holds rank, and the root
+    *    is removed.
     * Returns DF(id, rank) rounded to 9 decimals. */
   object WithLabel extends Enumeration {
     val SameLabel, OtherLabel, BothLabel = Value
@@ -726,9 +839,74 @@ object Traversals {
 
   def personalRank(g: PropertyGraph, source: String, label: String,
                    alpha: Double, maxDepth: Int,
-                   withLabel: WithLabel.Value = WithLabel.BothLabel): DataFrame = {
+                   withLabel: WithLabel.Value = WithLabel.BothLabel): DataFrame =
+    labeledIndex(g, Seq(label)) match {
+      case Some((ix, mask)) =>
+        val spark = g.vertices.sparkSession
+        import spark.implicits._
+        val ranks = personalRankLocal(ix, mask, source, alpha, maxDepth)
+        val sliced = if (withLabel == WithLabel.BothLabel || ranks.isEmpty) ranks else {
+          // the vertex labels of the root and the ranked ids: one small job
+          val side = g.vertices.join(broadcast((source +: ranks.map(_._1)).toDF("id")), Seq("id"))
+            .select(col("id"), col("label")).as[(String, String)].collect().toMap
+          side.get(source).fold(Seq.empty[(String, Double)]) { root =>
+            ranks.filter(r => side.get(r._1).contains(root) == (withLabel == WithLabel.SameLabel))
+          }
+        }
+        sliced.toDF("id", "rank").select(col("id"), round(col("rank"), 9).as("rank"))
+      case None => personalRankJoin(g, source, label, alpha, maxDepth, withLabel)
+    }
+
+  /** [[personalRankJoin]]'s rounds on the driver index: every ranked vertex
+    * pushes `rank * alpha / deg` along each of its BOTH `label` edges (OUT,
+    * then transposed IN), one push per parallel edge; a vertex with no such
+    * edge keeps its rank; the root gains `1 - alpha`. Each vertex's pushes
+    * add up with Neumaier's compensated sum, so the total does not depend on
+    * their order. Returns the unrounded (id, rank) rows without the root and
+    * the vertices its first round reached. */
+  private def personalRankLocal(ix: LocalAdjacency, mask: Array[Boolean], source: String,
+                                alpha: Double, maxDepth: Int): Seq[(String, Double)] = {
+    val s = ix.idOf(source)
+    if (s < 0 || maxDepth < 1) return Nil // only the root holds rank
+    val n = ix.vertexCount
+    val sum = new Array[Double](n)
+    val comp = new Array[Double](n)
+    var ranked = Array(s)
+    var rank = Array(1.0)
+    var rootAdj: java.util.BitSet = null
+    for (i <- 0 until maxDepth) {
+      val touched = new java.util.BitSet(n)
+      val next = Array.newBuilder[Int]
+      def add(v: Int, x: Double): Unit = {
+        if (!touched.get(v)) { touched.set(v); next += v; sum(v) = 0.0; comp(v) = 0.0 }
+        val t = sum(v) + x
+        comp(v) += (if (math.abs(sum(v)) >= math.abs(x)) (sum(v) - t) + x else (x - t) + sum(v))
+        sum(v) = t
+      }
+      for (k <- ranked.indices) {
+        val deg = ix.degree(ranked(k), Direction.BOTH, mask)
+        if (deg == 0) add(ranked(k), rank(k))
+        else {
+          val push = rank(k) * alpha / deg
+          ix.foreachEdge(ranked(k), Direction.BOTH, mask)(add(_, push))
+        }
+      }
+      add(s, 1.0 - alpha)
+      ranked = next.result()
+      rank = ranked.map(v => sum(v) + comp(v))
+      if (i == 0) rootAdj = touched
+    }
+    ranked.indices.filterNot(k => rootAdj.get(ranked(k)))
+      .map(k => (ix.name(ranked(k)), rank(k)))
+  }
+
+  /** [[personalRank]]'s Spark rounds. */
+  private[graft] def personalRankJoin(g: PropertyGraph, source: String, label: String,
+                                      alpha: Double, maxDepth: Int,
+                                      withLabel: WithLabel.Value): DataFrame = {
     val spark = g.vertices.sparkSession
     import spark.implicits._
+    if (maxDepth < 1) return Seq.empty[(String, Double)].toDF("id", "rank")
     // directed edges of the bipartite label, kept once; "forward" = src side
     val fwd = g.outEdges.filter(col("label") === label).select(col("src"), col("dst"))
     val bwd = fwd.select(col("dst").as("src"), col("src").as("dst"))
@@ -760,11 +938,14 @@ object Traversals {
       case side =>
         // root's vertex label picks the SAME side; the bipartite contract
         // means the other side is exactly the complement (left_anti)
-        val rootLabel = g.vertices.filter(col("id") === source)
-          .select(col("label")).head().getString(0)
-        val sameSide = g.verticesOf(rootLabel).select(col("id"))
-        if (side == WithLabel.SameLabel) out.join(sameSide, Seq("id"), "left_semi")
-        else out.join(sameSide, Seq("id"), "left_anti")
+        g.vertices.filter(col("id") === source).select(col("label")).as[String]
+          .take(1).headOption match {
+          case None => out.limit(0)
+          case Some(rootLabel) =>
+            val sameSide = g.verticesOf(rootLabel).select(col("id"))
+            if (side == WithLabel.SameLabel) out.join(sameSide, Seq("id"), "left_semi")
+            else out.join(sameSide, Seq("id"), "left_anti")
+        }
     }
     sliced.select(col("id"), round(col("rank"), 9).as("rank"))
   }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-/** Differential spec of the driver-index regime: each of the six traversers
-  * that answer from a [[LocalAdjacency]] must return exactly what its Spark
+/** Differential spec of the driver-index regime: each traverser that
+  * answers from a [[LocalAdjacency]] must return exactly what its Spark
   * loop returns — same rows, or the same capacity failure — and must answer
   * as a local relation (no Spark job to collect it). */
 class LocalAdjacencySpec extends SparkSpec {
@@ -111,6 +111,52 @@ class LocalAdjacencySpec extends SparkSpec {
 
   private val dirs = Seq(Direction.OUT, Direction.IN, Direction.BOTH)
 
+  /** The neighbor-set traversers on the labeled index against their Spark
+    * bodies, for the pair (a, b). */
+  private def pairKernels(g: PropertyGraph, a: String, b: String, dir: Direction.Value,
+                          labels: Seq[String]): Unit = {
+    val what = s"$a $b $dir $labels"
+    same(s"neighbors $what")(Traversals.neighbors(g, a, dir, labels))(
+      Traversals.neighborsJoin(g, a, dir, labels))
+    same(s"sameNeighbors $what")(Traversals.sameNeighbors(g, a, b, dir, labels))(
+      Traversals.sameNeighborsJoin(g, a, b, dir, labels))
+    same(s"jaccard $what")(Traversals.jaccardSimilarity(g, a, b, dir, labels))(
+      Traversals.jaccardSimilarityJoin(g, a, b, dir, labels))
+    same(s"adamicAdar $what")(Traversals.adamicAdar(g, a, b, dir, labels))(
+      Traversals.adamicAdarJoin(g, a, b, dir, labels))
+    same(s"resourceAllocation $what")(Traversals.resourceAllocation(g, a, b, dir, labels))(
+      Traversals.resourceAllocationJoin(g, a, b, dir, labels))
+  }
+
+  private def batch(g: PropertyGraph, vs: Seq[String], dir: Direction.Value,
+                    labels: Seq[String]): Unit =
+    same(s"sameNeighborsBatch $vs $dir $labels")(
+      Traversals.sameNeighborsBatch(g, vs, dir, labels))(
+      Traversals.sameNeighborsBatchJoin(g, vs, dir, labels))
+
+  private def personalRank(g: PropertyGraph, s: String, label: String, depth: Int,
+                           sides: Seq[Traversals.WithLabel.Value] =
+                             Traversals.WithLabel.values.toSeq): Unit =
+    for (side <- sides)
+      same(s"personalRank $s $label $depth $side")(
+        Traversals.personalRank(g, s, label, 0.85, depth, side))(
+        Traversals.personalRankJoin(g, s, label, 0.85, depth, side))
+
+  /** Orders o1..o3 and an edgeless order x buying parts p1..p3 — o1 buys p1
+    * twice (parallel edges) — plus `likes` edges o1→o2 and the self-loop
+    * p1→p1. */
+  private lazy val shop: PropertyGraph = {
+    val verts = Seq("o1", "o2", "o3", "x").map((_, "order")) ++
+      Seq("p1", "p2", "p3").map((_, "part"))
+    val edges = Seq(("o1", "buys", "p1"), ("o1", "buys", "p1"), ("o1", "buys", "p2"),
+      ("o2", "buys", "p2"), ("o2", "buys", "p3"), ("o3", "buys", "p3"), ("o3", "buys", "p1"),
+      ("o1", "likes", "o2"), ("p1", "likes", "p1"))
+    PropertyGraph(verts.toDF("id", "label"),
+      edges.toDF("src", "label", "dst").withColumn("sort_values", lit(null).cast("string")),
+      GraphSchema(Nil, Seq(VertexLabelDef("order", Nil), VertexLabelDef("part", Nil)),
+        Seq(EdgeLabelDef("buys", "order", "part"), EdgeLabelDef("likes", "order", "order"))))
+  }
+
   /** Per vertex label of the sf0.001 graph: one anchor drawn uniformly and
     * one from the label's top decile by BOTH degree (seeded draws). */
   private lazy val anchors: Seq[String] = {
@@ -198,6 +244,86 @@ class LocalAdjacencySpec extends SparkSpec {
     allShortestPaths(modern, "software:lop", "person:marko", Direction.OUT, Nil, 4)
   }
 
+  test("labeled index: the OUT view only, labels per edge, IN as its transpose") {
+    val ix = LocalAdjacency.of(Traversals.labeledAdjacency(shop, Direction.OUT, Nil)).get
+    assert(ix.edgeCount === 9 && ix.vertexCount === 6) // x has no edge
+    // the BOTH view is never collected: IN and BOTH read the transpose
+    assert(LocalAdjacency.of(Traversals.labeledAdjacency(shop, Direction.BOTH, Nil)).isEmpty)
+    val buys = ix.labelMask(Seq("buys"))
+    val all = ix.labelMask(Nil)
+    def names(a: Array[Int]) = a.map(ix.name).toSeq
+    val p1 = ix.idOf("p1")
+    assert(names(ix.neighborSet(p1, Direction.IN, buys)).toSet === Set("o1", "o3"))
+    assert(ix.degree(p1, Direction.IN, buys) === 3) // o1's two parallel edges
+    // the self-loop is an OUT and an IN edge of p1
+    assert(ix.degree(p1, Direction.BOTH, ix.labelMask(Seq("likes"))) === 2)
+    assert(ix.degree(p1, Direction.BOTH, all) === 5)
+    val o1 = ix.neighborSet(ix.idOf("o1"), Direction.BOTH, all)
+    assert(names(o1).toSet === Set("p1", "p2", "o2") && o1.sorted.sameElements(o1))
+    assert(ix.neighborSet(ix.idOf("x"), Direction.BOTH, all).isEmpty)
+    assert(ix.transposed.edgeCount === 9 && (ix.transposed eq ix.transposed))
+  }
+
+  test("neighbor sets, prediction scores and personalRank: modern graph and edge cases") {
+    val vs = Seq("person:marko", "person:vadas", "person:josh", "person:peter",
+      "software:lop", "software:ripple", "person:nobody")
+    for (dir <- dirs; (a, b) <- vs.zip(vs.reverse) ++ vs.map(v => (v, v)))
+      pairKernels(modern, a, b, dir, Nil)
+    for (labels <- Seq(Seq("knows"), Seq("created"), Seq("knows", "created"), Seq("nolabel")))
+      pairKernels(modern, "person:marko", "person:josh", Direction.BOTH, labels)
+    for (dir <- dirs; labels <- Seq(Nil, Seq("created"))) {
+      batch(modern, Seq("person:marko", "person:josh", "person:peter"), dir, labels)
+      batch(modern, Seq("person:marko", "person:marko"), dir, labels)
+      batch(modern, Seq("software:lop", "person:nobody"), dir, labels)
+    }
+    for (depth <- 0 to 3; s <- Seq("person:marko", "software:lop", "person:vadas",
+      "person:nobody")) personalRank(modern, s, "created", depth)
+    for (depth <- 1 to 3) personalRank(modern, "person:marko", "knows", depth)
+    // parallel edges, a self-loop, an edgeless vertex
+    val ss = Seq("o1", "o2", "o3", "x", "p1", "p3")
+    for (dir <- dirs; (a, b) <- ss.zip(ss.reverse) ++ Seq(("o1", "o1"), ("p1", "p1")))
+      for (labels <- Seq(Nil, Seq("buys"), Seq("likes"))) pairKernels(shop, a, b, dir, labels)
+    for (dir <- dirs) batch(shop, Seq("o1", "o2", "o3"), dir, Nil)
+    batch(shop, Seq("p1", "p3"), Direction.IN, Seq("buys"))
+    for (depth <- 0 to 3; s <- Seq("o1", "p1", "x")) {
+      personalRank(shop, s, "buys", depth)
+      personalRank(shop, s, "likes", depth)
+    }
+  }
+
+  test("personalRank: a source that is no vertex answers empty in every slice, on both paths") {
+    for (side <- Traversals.WithLabel.values.toSeq; depth <- 1 to 2;
+         g <- Seq(modern, shop); label <- Seq("created", "buys")) {
+      val byIndex = Traversals.personalRank(g, "nobody", label, 0.85, depth, side)
+      val byJoin = Traversals.personalRankJoin(g, "nobody", label, 0.85, depth, side)
+      for (df <- Seq(byIndex, byJoin)) {
+        assert(df.columns.toSeq === Seq("id", "rank"))
+        assert(df.collect().isEmpty, s"$side $depth $label")
+      }
+    }
+  }
+
+  test("a SUB label on a sub_label frame takes the Spark path") {
+    val schema = GraphSchema(Nil, Seq(VertexLabelDef("person", Nil), VertexLabelDef("acct", Nil)),
+      Seq(EdgeLabelDef("transfer", "person", "acct", isParent = true),
+        EdgeLabelDef("wire", "person", "acct", father = Some("transfer")),
+        EdgeLabelDef("card", "person", "acct", father = Some("transfer"))))
+    val edges = Seq(("p1", "a1", "transfer", "wire"), ("p1", "a2", "transfer", "card"),
+      ("p2", "a1", "transfer", "wire"), ("p2", "a2", "transfer", "wire"))
+      .toDF("src", "dst", "label", "sub_label")
+      .withColumn("sort_values", lit(null).cast("string"))
+    val g = PropertyGraph(Seq(("p1", "person"), ("p2", "person"), ("a1", "acct"),
+      ("a2", "acct")).toDF("id", "label"), edges, schema)
+    val wire = Traversals.sameNeighbors(g, "p1", "p2", Direction.OUT, Seq("wire"))
+    assert(!wire.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(ids(wire) === Set("a1"))
+    assert(ids(Traversals.neighbors(g, "a2", Direction.IN, Seq("card"))) === Set("p1"))
+    // the father label is the stored one: the index answers it
+    pairKernels(g, "p1", "p2", Direction.OUT, Seq("transfer"))
+    assert(ids(Traversals.sameNeighbors(g, "p1", "p2", Direction.OUT, Seq("transfer"))) ===
+      Set("a1", "a2"))
+  }
+
   test("capacity guard: same count at the same layer on both regimes") {
     // marko BOTH: visited 4 after layer 1, 6 after layer 2
     for (cap <- Seq(0L, 3L, 4L, 5L, 6L)) {
@@ -267,7 +393,22 @@ class LocalAdjacencySpec extends SparkSpec {
       rings(tpch, s, Direction.BOTH, labels, 4)
       sssp(tpch, s, Direction.BOTH, labels, "quantity", 3)
     }
+    // the neighbor-set traversers and personalRank from order anchors, each
+    // paired with the lowest-id order two `contains` hops away
+    val contains = Seq("contains")
+    for (a <- anchors.filter(_.startsWith("order:"))) {
+      val b = Traversals.koutNearest(tpch, a, Direction.BOTH, contains, 2)
+        .as[String].collect().sorted.headOption.getOrElse(a)
+      pairKernels(tpch, a, b, Direction.OUT, contains)
+      pairKernels(tpch, a, b, Direction.BOTH, Nil)
+      for (depth <- 1 to 3) personalRank(tpch, a, "contains", depth)
+    }
     // the registry's own parameters
+    pairKernels(tpch, "order:3", "order:6771", Direction.OUT, contains)
+    batch(tpch, Seq("supplier:1", "supplier:2", "supplier:3"), Direction.IN, Seq("supplied_by"))
+    personalRank(tpch, "order:42", "contains", 2, Seq(Traversals.WithLabel.BothLabel))
+    personalRank(tpch, "order:42", "contains", 3,
+      Seq(Traversals.WithLabel.OtherLabel, Traversals.WithLabel.SameLabel))
     rings(tpch, "customer:130", Direction.BOTH, Nil, 4)
     allShortestPaths(tpch, "customer:1", "supplier:3", Direction.BOTH, Nil, 3)
     kneighbor(tpch, "customer:1", Direction.OUT, Nil, 3, capacity = 20L)
