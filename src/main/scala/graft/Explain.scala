@@ -36,11 +36,11 @@ object Explain {
     "q_cypher_pipeline" -> "r12b: MATCH after WITH = hash agg (HAVING) then a join back onto the carried bindings; the 25-row nation side broadcasts into the final re-aggregation",
     "q_cypher_expr_agg" -> "r12b: aggregate-over-expression compiles into the SAME hash aggregate as a plain sum — the arithmetic rides the partial-agg projection, no extra pass",
     "q_cypher_unwind" -> "r12b: a literal UNWIND seed is a 3-row local relation — the guarded cross broadcasts it; WHERE equality cuts the product before any wide join",
-    "q_cypher_shortestpath" -> "r12b: first-seen BFS — per-round localCheckpoint keeps the plan depth O(rounds); the WHERE c.name pushdown makes the source set 1 row, so every hop is a broadcast frontier join",
+    "q_cypher_shortestpath" -> "first-seen BFS on the labeled driver index — the WHERE c.name pushdown makes the start set 1 row (one job collects it), the pairs are a local relation, and the end label is one broadcast semi join; with no index built, a per-round localCheckpoint frontier join loop",
     "q_gremlin_until" -> "r12b: repeat().until() splits each checkpointed round into exit/continue filters — one edge-scan join per round, frontier always the broadcast side",
     "q_gremlin_group_agg" -> "r12b: group().by().by(sum) is one partial-agg hash aggregate over the vertex scan — the modulator form adds zero plan nodes vs groupCount",
     "q_cypher_varlen_paths" -> "r13: PER-PATH expansion is still ONE lazy plan — the content-key edge view is computed once per hop side, the relationship-uniqueness guard is a join-filter on the equi-join (no cartesian), no distincts anywhere, and the final hop pre-filters to the end label",
-    "q_cypher_allshortest" -> "r13: path-carrying first-seen BFS — per-round localCheckpoint, the pushed source equality makes every hop a broadcast frontier join; the vertex-array column rides the frontier, no re-derivation",
+    "q_cypher_allshortest" -> "all shortest paths on the labeled driver index — path counts on the shortest-path DAG bound the rows before any path is enumerated, the paths are a local relation, and the end label is one broadcast semi join; with no index built, the path-carrying per-round frontier join loop",
     "q_cypher_set" -> "r13: MATCH…SET is a column update — the matched id set (one aggregate-free semi-ish left join) conditionally rewrites ONE column; the vertex table is scanned once and never row-mutated",
     "q_gremlin_sack" -> "r13: the sack is a rider column — two edge joins and a projection, zero extra exchanges vs the same walk without the sack",
     "q_cypher_merge" -> "r13: MERGE is two batch joins — one inner join over the tiny literal batch for conflict detection, one anti join to pick the inserts; the vertex table scans twice and never row-mutates")
@@ -520,7 +520,8 @@ object Explain {
     sb ++= "table shuffled in ≥3 executions of one query (= re-shuffled inside an\n"
     sb ++= "iterative loop body). `exch` = shuffle exchanges in the final plan;\n"
     sb ++= "`execs` = captured executions (iterative queries materialize per round).\n"
-    sb ++= "A traverser answered from the driver index (`LocalAdjacency`, built when a view of ≤ 2M rows is pinned) plans as one local relation: 0 exch.\n\n"
+    sb ++= "A traverser answered from the driver index (`LocalAdjacency`, built when a view of ≤ 2M rows is pinned) plans as one local relation: 0 exch.\n"
+    sb ++= "The frontends lower onto the labeled OUT index when it is built: Cypher `shortestPath()`/`allShortestPaths()` pairs and paths and Gremlin `repeat(out|in|both(…)).times(n)` walks are a local relation, and only the end-label semi join, the vertex join and the query's own operators plan exchanges.\n\n"
     sb ++= s"**Red flags: ${sweepFlags.size}**"
     sb ++= (if (sweepFlags.isEmpty) " — clean.\n\n" else "\n\n" + sweepFlags.map(a =>
       s"- ${a.name}: ${a.flags.mkString(", ")}").mkString("\n") + "\n\n")

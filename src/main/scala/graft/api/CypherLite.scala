@@ -1,8 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.core.{Direction, EdgeStep, PropertyGraph}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import graft.core.{Direction, EdgeStep, LocalAdjacency, PropertyGraph}
+import graft.traverse.Traversals
 
 /** OpenCypher-subset frontend. The reference serves Cypher by translating to
   * Gremlin and reusing the same engine (`api/cypher/CypherAPI.java:49-95`,
@@ -2353,39 +2355,111 @@ object CypherLite {
     PathExplosionWatch.tag(out.map(_.drop("__eks")).reduce(_ unionByName _))
   }
 
-  /** `shortestPath()` lowering: per-source layered BFS with FIRST-SEEN
-    * dedup — every emitted (start, reached) pair carries its MINIMUM hop
-    * count (pair semantics, the contract [[expandVarLength]] uses, plus
-    * the layer tag). Sources are optionally pre-filtered by equality
-    * conjuncts pushed from WHERE (the fan-out killer for the common
-    * `WHERE a.name = …` form); each round cuts lineage
-    * (`localCheckpoint`) and the loop stops early once no pair is new.
-    * Bounded by the parsed max (≤ 16). */
-  private def shortestChain(g: PropertyGraph, mc: MatchClause,
-                            srcFilter: Option[Column]): DataFrame = {
-    val pv = mc.pathVar.get
-    val n0 = mc.nodes.head
-    val n1 = mc.nodes(1)
+  /** A shortest-path clause's start vertices (`__a`, the equality
+    * conjuncts pushed from WHERE applied — the fan-out killer for the common
+    * `WHERE a.name = …` form), its direction and its end-label id set. */
+  private def shortestParts(g: PropertyGraph, mc: MatchClause, srcFilter: Option[Column])
+      : (DataFrame, Direction.Value, Option[DataFrame]) = {
     val rel = mc.rels.head
     val dir = if (rel.undirected) Direction.BOTH
               else if (rel.forward) Direction.OUT else Direction.IN
-    val e = EdgeStep(dir, rel.labels).edgesFor(g)
-      .select(col("src"), col("dst"))
-    val base0 = n0.label.map(l => verticesOfLabel(g, l)).getOrElse(g.vertices)
+    val base0 = mc.nodes.head.label.map(l => verticesOfLabel(g, l)).getOrElse(g.vertices)
     val base = srcFilter.fold(base0)(f => base0.filter(f))
-    val srcs = base.select(col("id").as("__a")).distinct()
-    def emit(df: DataFrame): DataFrame =
-      n1.label.fold(df)(l => df.join(verticesOfLabel(g, l).select(col("id")),
-        df("__x") === col("id"), "left_semi"))
+    (base.select(col("id").as("__a")), dir,
+      mc.nodes(1).label.map(l => verticesOfLabel(g, l).select(col("id"))))
+  }
+
+  /** `shortestPath()` lowering onto [[shortestPairs]]: one row per (start,
+    * reached) pair, with the pair's minimum hop count as `<p>___len`. */
+  private def shortestChain(g: PropertyGraph, mc: MatchClause,
+                            srcFilter: Option[Column]): DataFrame = {
+    val (srcs, dir, endIds) = shortestParts(g, mc, srcFilter)
+    val rel = mc.rels.head
+    shortestPairs(g, srcs, dir, rel.labels, rel.minHops, rel.maxHops, endIds)
+      .select(col("__a").as(mc.nodes.head.v), col("__x").as(mc.nodes(1).v),
+        col("__len").as(s"${mc.pathVar.get}___len"))
+  }
+
+  /** `allShortestPaths()` lowering onto [[allShortestPathRows]]: one row per
+    * path, with `<p>___len` (hop count), `<p>___nodes` (vertex array) and,
+    * for one named label, `<p>___rels`. */
+  private def allShortestChain(g: PropertyGraph, mc: MatchClause,
+                               srcFilter: Option[Column]): DataFrame = {
+    val (srcs, dir, endIds) = shortestParts(g, mc, srcFilter)
+    val pv = mc.pathVar.get
+    val rel = mc.rels.head
+    val projected = allShortestPathRows(g, srcs, dir, rel.labels, rel.minHops, rel.maxHops, endIds)
+      .select(col("__a").as(mc.nodes.head.v), col("__x").as(mc.nodes(1).v),
+        col("__len").as(s"${pv}___len"), col("__vp").as(s"${pv}___nodes"))
+    if (rel.singleLabel) projected.withColumn(s"${pv}___rels",
+      renderRels(col(s"${pv}___nodes"), rel.label))
+    else projected
+  }
+
+  /** The labeled driver index, its mask for `labels` and the distinct
+    * start ids of `srcs` (`__a`): when the index is built (never pinned
+    * here), answers `labels`, and there are at most
+    * `frontierPushdownMaxIds` starts — one job collects them. */
+  private def indexedStarts(g: PropertyGraph, srcs: DataFrame, labels: Seq[String])
+      : Option[(LocalAdjacency, Array[Boolean], Seq[String])] =
+    Traversals.labeledIndex(g, labels, pin = false).flatMap { case (ix, mask) =>
+      Traversals.smallIdSet(srcs, "__a").map(ids => (ix, mask, ids.distinct))
+    }
+
+  /** The rows of `df` whose reached vertex `__x` is in `endIds`: a lazy
+    * semi join. */
+  private def endsIn(df: DataFrame, endIds: Option[DataFrame]): DataFrame =
+    endIds.fold(df)(f => df.join(f, df("__x") === f("id"), "left_semi"))
+
+  /** Driver rows as a local relation, restricted to the end-label ids. */
+  private def localRows(g: PropertyGraph, rows: java.util.List[Row], schema: StructType,
+                        endIds: Option[DataFrame]): DataFrame =
+    endsIn(g.vertices.sparkSession.createDataFrame(rows, schema), endIds)
+
+  private val pairSchema = StructType(Seq(StructField("__a", StringType),
+    StructField("__x", StringType), StructField("__len", LongType)))
+
+  /** shortestPath()'s pairs: for each distinct start (`__a` of `srcs`), a
+    * first-visit BFS over `dir` edges of `labels` — every (start, reached)
+    * pair once, at its minimum hop count 1..`maxHops` (pair semantics, the
+    * contract [[expandVarLength]] uses, plus the layer tag), and (start,
+    * start, 0) when `minHops` = 0; the reached end restricted to `endIds`.
+    * Columns (__a, __x, __len). Answered on the driver from the labeled
+    * index ([[LocalAdjacency.bfs]]) as a local relation when
+    * [[indexedStarts]] holds and there are at most `bfsBroadcastMaxRows`
+    * pairs; by the Spark loop [[shortestPairsJoin]] otherwise. */
+  private[graft] def shortestPairs(g: PropertyGraph, srcs: DataFrame, dir: Direction.Value,
+                                   labels: Seq[String], minHops: Int, maxHops: Int,
+                                   endIds: Option[DataFrame]): DataFrame =
+    indexedStarts(g, srcs, labels).flatMap { case (ix, mask, starts) =>
+      val bfs = ix.bfs(dir, mask)
+      val rows = new java.util.ArrayList[Row]()
+      val fits = starts.forall { a =>
+        if (minHops == 0) rows.add(Row(a, a, 0L))
+        for (v <- bfs.run(ix.idOf(a), maxHops)) rows.add(Row(a, ix.name(v), bfs.hops(v).toLong))
+        rows.size <= Traversals.bfsBroadcastMaxRows
+      }
+      if (fits) Some(localRows(g, rows, pairSchema, endIds)) else None
+    }.getOrElse(shortestPairsJoin(g, srcs, dir, labels, minHops, maxHops, endIds))
+
+  /** [[shortestPairs]]' Spark loop: per round, the pairs one hop past the
+    * last round's, anti-joined against every pair seen (first seen = minimum
+    * hops); each round cuts lineage (`localCheckpoint`) and the loop stops
+    * early once no pair is new. */
+  private[graft] def shortestPairsJoin(g: PropertyGraph, srcs0: DataFrame, dir: Direction.Value,
+                                       labels: Seq[String], minHops: Int, maxHops: Int,
+                                       endIds: Option[DataFrame]): DataFrame = {
+    val e = EdgeStep(dir, labels).edgesFor(g).select(col("src"), col("dst"))
+    val srcs = srcs0.distinct()
     var frontier = srcs.select(col("__a"), col("__a").as("__x"))
       .localCheckpoint(true)
     var seen = frontier
     var out = List.empty[DataFrame]
-    if (rel.minHops == 0)
-      out ::= emit(frontier).withColumn("__len", lit(0L))
+    if (minHops == 0)
+      out ::= endsIn(frontier, endIds).withColumn("__len", lit(0L))
     var h = 1
     var drained = false
-    while (h <= rel.maxHops && !drained) {
+    while (h <= maxHops && !drained) {
       val stepped = frontier.join(e, frontier("__x") === e("src"))
         .select(col("__a"), col("dst").as("__x")).distinct()
       // lazy checkpoint + count: ONE job materializes the layer AND
@@ -2396,77 +2470,101 @@ object CypherLite {
       if (fresh.count() == 0L) drained = true
       else {
         seen = seen.unionByName(fresh)
-        out ::= emit(fresh).withColumn("__len", lit(h.toLong))
+        out ::= endsIn(fresh, endIds).withColumn("__len", lit(h.toLong))
         frontier = fresh
       }
       h += 1
     }
-    val pairs = out.reduceOption(_ unionByName _)
+    out.reduceOption(_ unionByName _)
       .getOrElse(frontier.withColumn("__len", lit(0L)).limit(0))
-    pairs.select(col("__a").as(n0.v), col("__x").as(n1.v),
-      col("__len").as(s"${pv}___len"))
   }
 
-  /** `allShortestPaths()` lowering — the PATH-CARRYING twin of
-    * [[shortestChain]]: per round, walks extending last round's shortest
-    * paths; a (start, reached) pair is settled the FIRST round it appears,
-    * and EVERY walk reaching it that round is a shortest path (a
-    * minimal-length walk can never revisit a vertex or repeat an edge —
-    * cutting the loop would shorten it — so the walks ARE simple paths and
-    * need no uniqueness bookkeeping; a walk whose endpoint pair was seen
-    * earlier can prefix no shortest path either, so the frontier stays
-    * exactly the new shortest paths). Multiplicity is openCypher's: the
-    * edge view preserves parallel edges, one path row per relationship
+  private val pathSchema = StructType(pairSchema.fields :+
+    StructField("__vp", ArrayType(StringType)))
+
+  /** allShortestPaths()'s paths — the PATH-CARRYING twin of
+    * [[shortestPairs]]: a (start, reached) pair is settled at its minimum
+    * hop count, and EVERY walk of that length reaching it is a shortest
+    * path (a minimal-length walk can never revisit a vertex or repeat an
+    * edge — cutting the loop would shorten it — so the walks ARE simple
+    * paths and need no uniqueness bookkeeping). Multiplicity is
+    * openCypher's: parallel edges count, one path row per relationship
     * combination. Engine twin of [[graft.traverse.PathTraversals
     * .allShortestPaths]] (reference `ShortestPathTraverser.java:104`),
-    * generalized to frontier sources with the same per-round
-    * localCheckpoint + drained-frontier discipline. Emits one row per path
-    * with `<p>___len` (hop count) and `<p>___nodes` (vertex array). */
-  private def allShortestChain(g: PropertyGraph, mc: MatchClause,
-                               srcFilter: Option[Column]): DataFrame = {
-    val pv = mc.pathVar.get
-    val n0 = mc.nodes.head
-    val n1 = mc.nodes(1)
-    val rel = mc.rels.head
-    val dir = if (rel.undirected) Direction.BOTH
-              else if (rel.forward) Direction.OUT else Direction.IN
-    val e = EdgeStep(dir, rel.labels).edgesFor(g)
-      .select(col("src"), col("dst"))
-    val base0 = n0.label.map(l => verticesOfLabel(g, l)).getOrElse(g.vertices)
-    val base = srcFilter.fold(base0)(f => base0.filter(f))
-    val srcs = base.select(col("id").as("__a")).distinct()
-    def emit(df: DataFrame): DataFrame =
-      n1.label.fold(df)(l => df.join(verticesOfLabel(g, l).select(col("id")),
-        df("__x") === col("id"), "left_semi"))
+    * generalized to a start set. Columns (__a, __x, __len, __vp), `__vp`
+    * the vertex array. Answered on the driver from the labeled index when
+    * [[indexedStarts]] holds and the paths, counted on the shortest-path
+    * DAG before any is enumerated, are at most `bfsBroadcastMaxRows`; by
+    * the Spark loop [[allShortestPathRowsJoin]] otherwise. */
+  private[graft] def allShortestPathRows(g: PropertyGraph, srcs: DataFrame,
+                                         dir: Direction.Value, labels: Seq[String],
+                                         minHops: Int, maxHops: Int,
+                                         endIds: Option[DataFrame]): DataFrame =
+    allShortestPathsLocal(g, srcs, dir, labels, minHops, maxHops, endIds)
+      .getOrElse(allShortestPathRowsJoin(g, srcs, dir, labels, minHops, maxHops, endIds))
+
+  /** [[allShortestPathRows]] on the driver, or `None`. */
+  private[graft] def allShortestPathsLocal(g: PropertyGraph, srcs: DataFrame,
+                                           dir: Direction.Value, labels: Seq[String],
+                                           minHops: Int, maxHops: Int,
+                                           endIds: Option[DataFrame]): Option[DataFrame] =
+    indexedStarts(g, srcs, labels).flatMap { case (ix, mask, starts) =>
+      val bfs = ix.bfs(dir, mask)
+      val cap = Traversals.bfsBroadcastMaxRows
+      val rows = new java.util.ArrayList[Row]()
+      val fits = starts.forall { a =>
+        if (minHops == 0) rows.add(Row(a, a, 0L, Seq(a)))
+        val reached = bfs.run(ix.idOf(a), maxHops)
+        // each term capped first: a count saturated at Long.MaxValue must
+        // not overflow the sum
+        val paths = reached.foldLeft(rows.size.toLong)((n, v) =>
+          math.min(n + math.min(bfs.pathCount(v), cap + 1), cap + 1))
+        paths <= cap && {
+          for (v <- reached) bfs.foreachPath(v)(p =>
+            rows.add(Row(a, ix.name(v), (p.length - 1).toLong, p.toSeq.map(ix.name))))
+          true
+        }
+      }
+      if (fits) Some(localRows(g, rows, pathSchema, endIds)) else None
+    }
+
+  /** [[allShortestPathRows]]' Spark loop: per round, walks extending last
+    * round's shortest paths, anti-joined against every pair settled before
+    * (a walk whose endpoint pair was seen earlier can prefix no shortest
+    * path either, so the frontier stays exactly the new shortest paths),
+    * with the per-round localCheckpoint + drained-frontier discipline of
+    * [[shortestPairsJoin]]. */
+  private[graft] def allShortestPathRowsJoin(g: PropertyGraph, srcs0: DataFrame,
+                                             dir: Direction.Value, labels: Seq[String],
+                                             minHops: Int, maxHops: Int,
+                                             endIds: Option[DataFrame]): DataFrame = {
+    val e = EdgeStep(dir, labels).edgesFor(g).select(col("src"), col("dst"))
+    val srcs = srcs0.distinct()
     var frontier = srcs.select(col("__a"), col("__a").as("__x"),
       array(col("__a")).as("__vp")).localCheckpoint(true)
     var seen = frontier.select(col("__a"), col("__x"))
     var out = List.empty[DataFrame]
-    if (rel.minHops == 0) out ::= emit(frontier).withColumn("__len", lit(0L))
+    if (minHops == 0) out ::= endsIn(frontier, endIds).withColumn("__len", lit(0L))
     var h = 1
     var drained = false
-    while (h <= rel.maxHops && !drained) {
+    while (h <= maxHops && !drained) {
       val stepped = frontier.join(e, frontier("__x") === e("src"))
         .select(col("__a"), col("dst").as("__x"),
           concat(col("__vp"), array(col("dst"))).as("__vp"))
-      // lazy checkpoint + count — one job per hop, see [[shortestChain]]
+      // lazy checkpoint + count — one job per hop, see [[shortestPairsJoin]]
       val fresh = stepped.join(seen, Seq("__a", "__x"), "left_anti")
         .localCheckpoint(false)
       if (fresh.count() == 0L) drained = true
       else {
         seen = seen.unionByName(fresh.select(col("__a"), col("__x")).distinct())
-        out ::= emit(fresh).withColumn("__len", lit(h.toLong))
+        out ::= endsIn(fresh, endIds).withColumn("__len", lit(h.toLong))
         frontier = fresh
       }
       h += 1
     }
-    val paths = out.reduceOption(_ unionByName _)
+    out.reduceOption(_ unionByName _)
       .getOrElse(frontier.withColumn("__len", lit(0L)).limit(0))
-    val projected = paths.select(col("__a").as(n0.v), col("__x").as(n1.v),
-      col("__len").as(s"${pv}___len"), col("__vp").as(s"${pv}___nodes"))
-    if (rel.singleLabel) projected.withColumn(s"${pv}___rels",
-      renderRels(col(s"${pv}___nodes"), rel.label))
-    else projected
+      .select(col("__a"), col("__x"), col("__len"), col("__vp"))
   }
 
   /** Disconnected patterns are a cartesian product (Cypher semantics) —

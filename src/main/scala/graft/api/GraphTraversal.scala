@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 import graft.core.{Cond, Direction, EdgeStep, PropertyGraph}
+import graft.traverse.Traversals
 
 /** Gremlin-flavoured fluent DSL over DataFrames (SURVEY §2.9) — the
   * TinkerPop step surface re-expressed declaratively: every step is a lazy
@@ -140,9 +141,64 @@ final case class GraphTraversal(
     copy(df = ends.join(g.vertices, Seq("id"), "left"), isVertex = true)
   }
 
-  /** `repeat(n)(…)` — bounded repetition (the reference's repeat/times). */
+  /** `repeat(n)(…)` — bounded repetition (the reference's repeat/times):
+    * the body applied `times` times, a lazy plan of `times` hop joins. A
+    * one-hop body over a pinned graph answers from the driver index
+    * instead: [[repeatStep]]. */
   def repeat(times: Int)(f: GraphTraversal => GraphTraversal): GraphTraversal =
     (0 until times).foldLeft(this)((t, _) => f(t))
+
+  /** `repeat(out|in|both(labels…)).times(n)` — and with `emit`, the
+    * emit-after form `repeat(…).emit().times(n)` (layers 1..n): the walks
+    * of [[repeatWalk]] left-joined to the vertices, as [[step]] joins each
+    * hop, when the driver index answers them; [[repeatStepJoin]]
+    * otherwise. Same rows, walk multiplicity included. */
+  def repeatStep(dir: Direction.Value, labels: Seq[String], times: Int,
+                 emit: Boolean): GraphTraversal =
+    repeatWalk(dir, labels, times, emit) match {
+      case Some(walks) => copy(df = walks.join(g.vertices, Seq("id"), "left"), isVertex = true)
+      case None => repeatStepJoin(dir, labels, times, emit)
+    }
+
+  /** [[repeatStep]] as `times` Spark hop joins. */
+  private[graft] def repeatStepJoin(dir: Direction.Value, labels: Seq[String], times: Int,
+                                    emit: Boolean): GraphTraversal =
+    if (emit) repeatEmit(times)(_.step(dir, labels))
+    else repeat(times)(_.step(dir, labels))
+
+  /** The walks of [[repeatStep]] as a local relation `(id)`, one row per
+    * walk ending at `id` after `times` hops (with `emit`, after each of
+    * 1..`times` hops): walk counts propagated on the labeled driver index
+    * ([[graft.core.LocalAdjacency.walkCounts]]) from the frame's ids, a
+    * repeated id starting its walks that many times. `None` — the Spark
+    * twin's case — for an edge position, a path-tracked frame or one with
+    * riders, `times` < 1, no index built (the frontend never pins one), a
+    * SUB label on a `sub_label` frame, more than `frontierPushdownMaxIds`
+    * rows in the frame (one job collects them), or more than
+    * `bfsBroadcastMaxRows` walks. */
+  private[graft] def repeatWalk(dir: Direction.Value, labels: Seq[String], times: Int,
+                                emit: Boolean): Option[DataFrame] =
+    if (!isVertex || pathTracked || riderNames.nonEmpty || times < 1) None
+    else Traversals.labeledIndex(g, labels, pin = false).flatMap { case (ix, mask) =>
+      Traversals.smallIdSet(df, "id").flatMap { seeds =>
+        val bySeed = seeds.groupBy(identity).toSeq
+        val kept = Seq.newBuilder[(Array[Int], Array[Long])]
+        ix.walkCounts(bySeed.map(s => ix.idOf(s._1)).toArray, bySeed.map(_._2.size.toLong).toArray,
+            dir, mask, times) { (k, vs, counts) => if (emit || k == times) kept += ((vs, counts)) }
+        val layers = kept.result()
+        val cap = Traversals.bfsBroadcastMaxRows
+        // each term capped first, as a saturated count must not overflow the sum
+        if (layers.flatMap(_._2).foldLeft(0L)((n, c) => math.min(n + math.min(c, cap + 1), cap + 1)) > cap)
+          None
+        else {
+          val spark = df.sparkSession
+          import spark.implicits._
+          Some(layers.flatMap { case (vs, counts) =>
+            vs.indices.flatMap(i => Seq.fill(counts(i).toInt)(ix.name(vs(i))))
+          }.toDF("id"))
+        }
+      }
+    }
 
   /** `repeat(…).emit().times(n)` — bounded repetition EMITTING every
     * intermediate layer (TinkerPop emit-after-repeat: layers 1..n, walk

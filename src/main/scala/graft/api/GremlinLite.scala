@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.DataFrame
-import graft.core.{Cond, PropertyGraph}
+import graft.core.{Cond, Direction, PropertyGraph}
 
 /** Text frontend for a practical Gremlin subset — the reference's primary
   * entry point is a Gremlin script POST (`api/gremlin/GremlinAPI.java:51-88`
@@ -714,9 +714,15 @@ object GremlinLite {
               val times = num(x).toInt
               require(!(emitFirst && emitAfter),
                 "emit() on both sides of one repeat() is unsupported")
-              t = if (emitFirst) t union t.repeatEmit(times)(applySub(bodyFrag))
-                  else if (emitAfter) t.repeatEmit(times)(applySub(bodyFrag))
+              // a one-hop body walks the driver index (GraphTraversal.repeatStep)
+              def layers(emit: Boolean): GraphTraversal = bodyFrag match {
+                case List(PArg(d @ ("out" | "in" | "both"), as)) =>
+                  t.repeatStep(Direction.withName(d.toUpperCase), as.map(str), times, emit)
+                case _ =>
+                  if (emit) t.repeatEmit(times)(applySub(bodyFrag))
                   else t.repeat(times)(applySub(bodyFrag))
+              }
+              t = if (emitFirst) t union layers(emit = true) else layers(emitAfter)
             case Step("until", List(condA)) =>
               // repeat(sub).emit().until(cond): every traverser emitted
               // each round it survives, cond exits it from further looping

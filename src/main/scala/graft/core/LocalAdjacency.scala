@@ -115,6 +115,110 @@ final class LocalAdjacency private (
     n
   }
 
+  /** `a + b` for non-negative counts, Long.MaxValue once it overflows. */
+  private def saturated(a: Long, b: Long): Long = {
+    val s = a + b
+    if (s < 0L) Long.MaxValue else s
+  }
+
+  /** Multi-source shortest paths over the edges [[foreachEdge]] visits in
+    * `dir` under `mask`: the first-visit BFS of one source at a time, with
+    * scratch arrays reused across sources. */
+  def bfs(dir: Direction.Value, mask: Array[Boolean]): Bfs = new Bfs(dir, mask)
+
+  final class Bfs private[LocalAdjacency] (dir: Direction.Value, mask: Array[Boolean]) {
+    private val hop = Array.fill(ids.length)(-1)
+    private val paths = new Array[Long](ids.length)
+    private var source = -1
+    private var reached = Array.emptyIntArray
+
+    /** Runs the BFS from `s` (-1: a source with no edge in the view) over
+      * layers 1..`maxHops`, stopping after the first empty one. Returns the
+      * vertices reached, the source excluded, in first-visit order; each
+      * has its [[hops]] and its number of shortest paths ([[pathCount]]). */
+    def run(s: Int, maxHops: Int): Array[Int] = {
+      reached.foreach { v => hop(v) = -1; paths(v) = 0L }
+      if (source >= 0) { hop(source) = -1; paths(source) = 0L }
+      source = s
+      val out = Array.newBuilder[Int]
+      if (s >= 0) {
+        hop(s) = 0; paths(s) = 1L
+        var frontier = Array(s)
+        var d = 0
+        while (d < maxHops && frontier.nonEmpty) {
+          val next = Array.newBuilder[Int]
+          for (u <- frontier) foreachEdge(u, dir, mask) { v =>
+            if (hop(v) < 0) { hop(v) = d + 1; next += v }
+            if (hop(v) == d + 1) paths(v) = saturated(paths(v), paths(u))
+          }
+          frontier = next.result()
+          out ++= frontier
+          d += 1
+        }
+      }
+      reached = out.result()
+      reached
+    }
+
+    /** Hops of a reached vertex from the last [[run]]'s source. */
+    def hops(v: Int): Int = hop(v)
+
+    /** Shortest paths from the last [[run]]'s source to a reached vertex:
+      * one per combination of parallel edges, saturating at Long.MaxValue. */
+    def pathCount(v: Int): Long = paths(v)
+
+    /** Hands `f` every shortest path from the last [[run]]'s source to the
+      * reached vertex `t`, as its vertex sequence ([[pathCount]] of them):
+      * walks back along the reversed edges to the previous layer. `f` must
+      * not keep the array, which is reused. */
+    def foreachPath(t: Int)(f: Array[Int] => Unit): Unit = {
+      val back = dir match {
+        case Direction.OUT => Direction.IN
+        case Direction.IN => Direction.OUT
+        case _ => Direction.BOTH
+      }
+      val path = new Array[Int](hop(t) + 1)
+      def walk(v: Int, k: Int): Unit = {
+        path(k) = v
+        if (k == 0) f(path)
+        else foreachEdge(v, back, mask)(u => if (hop(u) == k - 1) walk(u, k - 1))
+      }
+      walk(t, hop(t))
+    }
+  }
+
+  /** Walk counts from `seeds` (a seed listed `seedCounts` times starts that
+    * many walks) over `times` hops of the edges [[foreachEdge]] visits in
+    * `dir` under `mask`: hands each hop k = 1..`times` to `f(k, vertices,
+    * counts)`, where `counts(i)` is the number of walks of exactly k hops
+    * ending at `vertices(i)` — one per combination of parallel edges,
+    * saturating at Long.MaxValue. Stops after the first empty hop. */
+  def walkCounts(seeds: Array[Int], seedCounts: Array[Long], dir: Direction.Value,
+                 mask: Array[Boolean], times: Int)(
+      f: (Int, Array[Int], Array[Long]) => Unit): Unit = {
+    var cur = new Array[Long](ids.length)
+    var next = new Array[Long](ids.length)
+    val start = Array.newBuilder[Int]
+    for (i <- seeds.indices if seeds(i) >= 0) {
+      if (cur(seeds(i)) == 0L) start += seeds(i)
+      cur(seeds(i)) = saturated(cur(seeds(i)), seedCounts(i))
+    }
+    var layer = start.result()
+    var k = 0
+    while (k < times && layer.nonEmpty) {
+      val touched = Array.newBuilder[Int]
+      for (u <- layer) foreachEdge(u, dir, mask) { v =>
+        if (next(v) == 0L) touched += v
+        next(v) = saturated(next(v), cur(u))
+      }
+      layer.foreach(cur(_) = 0L)
+      layer = touched.result()
+      k += 1
+      f(k, layer, layer.map(next))
+      val t = cur; cur = next; next = t
+    }
+  }
+
   /** First-visit BFS from `source`: runs layers 1..`maxDepth`, stopping
     * after the first empty one, and hands each to `each(depth, layer,
     * visited)`, where `visited` counts every vertex seen so far, the source

@@ -55,6 +55,19 @@ object Pin {
   def rowsOf(df: DataFrame): Option[Long] =
     Option(rowCounts.get(df)).map(_.longValue)
 
+  /** Frames pinned in this JVM. */
+  def size: Int = rowCounts.size
+
+  /** The pinned frame `sameResult`-equal to `df`, if [[pin]] made one; pins
+    * nothing. */
+  def find(df: DataFrame): Option[DataFrame] =
+    if (disabled) None
+    else {
+      val plan = df.queryExecution.analyzed
+      Option(cache.get((System.identityHashCode(df.sparkSession), plan.semanticHash())))
+        .flatMap(bucket => bucket.synchronized(bucket.find(_._1.sameResult(plan)).map(_._2)))
+    }
+
   private def memo(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.analyzed
     val key = (System.identityHashCode(df.sparkSession), plan.semanticHash())

@@ -20,15 +20,22 @@ import graft.core._
   *    OUT view's index carries per-edge labels and is transposed on the
   *    driver for IN/BOTH; `neighbors`, `sameNeighbors(Batch)`,
   *    `jaccardSimilarity`, `adamicAdar`/`resourceAllocation` and
-  *    `personalRank` answer from it under a label mask ([[labeledIndex]]);
+  *    `personalRank` answer from it under a label mask ([[labeledIndex]]).
+  *    The frontends read the same index without ever pinning it: Cypher
+  *    `shortestPath()`/`allShortestPaths()` (`CypherLite.shortestPairs`,
+  *    `allShortestPathRows`) and Gremlin `repeat(<one hop>).times(n)`
+  *    (`GraphTraversal.repeatStep`) walk it from at most
+  *    [[frontierPushdownMaxIds]] start ids ([[smallIdSet]], one job), as
+  *    long as their pairs, paths or walks stay within
+  *    [[bfsBroadcastMaxRows]];
   *  - Spark join: otherwise (views over the bound, `SPARK_GRAFT_NOPIN=1`,
-  *    `SPARK_GRAFT_BUCKETED=1`, a SUB label on a `sub_label` frame, and
-  *    every other traverser) a frontier is a DataFrame and one BFS layer
-  *    is ONE distributed hash join of the frontier against the edge table:
-  *    batching, parallelism and memory arbitration all come from Spark. At
-  *    100 TB the frontier join shuffles on `src`/`id`; a graph stored
-  *    bucketed by `src` co-locates every layer with zero shuffle on the
-  *    edges side.
+  *    `SPARK_GRAFT_BUCKETED=1`, a SUB label on a `sub_label` frame, too
+  *    many starts or rows, and every other traverser) a frontier is a
+  *    DataFrame and one BFS layer is ONE distributed hash join of the
+  *    frontier against the edge table: batching, parallelism and memory
+  *    arbitration all come from Spark. At 100 TB the frontier join
+  *    shuffles on `src`/`id`; a graph stored bucketed by `src` co-locates
+  *    every layer with zero shuffle on the edges side.
   *
   * The kneighbor/kout family runs on one Spark layer loop, [[layerLoop]]
   * (the reference drives them all from `OltpTraverser.traverseIdsByBfs`):
@@ -157,22 +164,41 @@ object Traversals {
     * and BOTH, so the twice-as-large BOTH view is never collected. */
   private[graft] def labeledAdjacency(g: PropertyGraph, dir: Direction.Value,
                                       labels: Seq[String]): DataFrame = {
-    val view = pinned(EdgeStep(dir, labels).edgesFor(g)
-      .select(col("src"), col("label"), col("dst"))
-      .sortWithinPartitions(col("src")))
+    val view = pinned(labeledPlan(g, dir, labels))
     if (dir == Direction.OUT && labels.isEmpty) indexed(view) else view
   }
 
+  private def labeledPlan(g: PropertyGraph, dir: Direction.Value,
+                          labels: Seq[String]): DataFrame =
+    EdgeStep(dir, labels).edgesFor(g)
+      .select(col("src"), col("label"), col("dst"))
+      .sortWithinPartitions(col("src"))
+
   /** The labeled OUT index with the mask of `labels` on it, when it can
     * answer them: a SUB label on a frame with a `sub_label` column cannot,
-    * since the view keeps only the stored `label`. */
-  private def labeledIndex(g: PropertyGraph,
-                           labels: Seq[String]): Option[(LocalAdjacency, Array[Boolean])] = {
+    * since the view keeps only the stored `label`. With `pin`, the view is
+    * pinned (and indexed) first; without, only an index already built
+    * answers — the frontends' lookup, which never pins a view. */
+  private[graft] def labeledIndex(g: PropertyGraph, labels: Seq[String],
+                                  pin: Boolean = true): Option[(LocalAdjacency, Array[Boolean])] = {
     val sub = g.edges.columns.contains("sub_label") &&
       g.schema.edgeLabels.exists(el => el.father.isDefined && labels.contains(el.name))
-    if (sub) None
-    else LocalAdjacency.of(labeledAdjacency(g, Direction.OUT, Nil))
-      .map(ix => (ix, ix.labelMask(labels)))
+    val view =
+      if (sub) None
+      else if (pin) Some(labeledAdjacency(g, Direction.OUT, Nil))
+      else Pin.find(labeledPlan(g, Direction.OUT, Nil))
+    view.flatMap(LocalAdjacency.of).map(ix => (ix, ix.labelMask(labels)))
+  }
+
+  /** The values of `df`'s string column `c` when there are at most
+    * [[frontierPushdownMaxIds]] rows, nulls dropped: one job, which takes
+    * at most that many + 1 rows from each partition (a `limit` collect
+    * would scan the partitions in growing batches, a job each). */
+  private[graft] def smallIdSet(df: DataFrame, c: String): Option[Seq[String]] = {
+    val cap = frontierPushdownMaxIds
+    val string = org.apache.spark.sql.Encoders.STRING
+    val ids = df.select(col(c)).as(string).mapPartitions(_.take(cap + 1))(string).collect()
+    if (ids.length > cap) None else Some(ids.toSeq.filter(_ != null))
   }
 
   /** Degree-capped frontier expansion: join FIRST, then truncate per vertex.
@@ -559,10 +585,8 @@ object Traversals {
     // [[frontierPushdownMaxIds]], beyond which the distributed join path
     // takes over
     var frontierIds: Option[Array[String]] = Some(Array(source))
-    val dbg = sys.env.get("GRAFT_TRACE_DEBUG").contains("1")
     while (foundAt < 0 && d < maxDepth && cnt > 0) {
       d += 1
-      val t0 = if (dbg) System.nanoTime() else 0L
       // Expansion never scans the full adjacency for a bounded frontier:
       // the ids are pushed down as a literal `src IN (...)` predicate, and
       // the columnar cache's per-batch min/max stats (view is clustered by
@@ -601,11 +625,6 @@ object Traversals {
         if (!stats.isNullAt(1)) foundAt = d
       }
       visitedCnt += cnt
-      if (dbg) {
-        System.err.println(
-          f"[trace] layer $d cnt=$cnt ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        System.err.println(next.queryExecution.executedPlan.toString.take(4000))
-      }
     }
     if (foundAt < 0) return Seq.empty[String].toDF("path")
     // backward walk as ONE lazy chain of single-row broadcast joins against
