@@ -14,8 +14,9 @@ object Bench {
     import graft.core.{Direction, EdgeStep}
     import graft.traverse.{PathTraversals, Traversals}
     g.vertices.count(); g.edges.count()
-    // the shared distinct adjacency views every traversal plans against
-    // (pinned once per session — the persist-once working set)
+    // the shared distinct adjacency views the Spark traversal loops plan
+    // against (pinned once per session — the persist-once working set);
+    // Spark pins only, with no driver index
     for (dir <- Seq(Direction.OUT, Direction.BOTH)) {
       Traversals.adjacencyView(g, dir)
       // multiplicity-preserving view (walk-counting traversals plan
@@ -25,8 +26,9 @@ object Bench {
     }
     // the labeled (src, label, dst) adjacency the degree-capped kout/
     // kneighbor family windows over (truncation needs the label sort key);
-    // the OUT view's driver index answers the neighbor-set traversers and
-    // personalRank
+    // the OUT view's driver index is the graph's one unweighted index: every
+    // driver traverser reads it under a label mask, IN and BOTH through its
+    // transpose
     Traversals.labeledAdjacency(g, Direction.OUT, Nil)
     Traversals.labeledAdjacency(g, Direction.BOTH, Nil)
     // the co-partitioned edge+degree view PageRank rounds plan against

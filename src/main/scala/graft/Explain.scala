@@ -520,7 +520,7 @@ object Explain {
     sb ++= "table shuffled in ≥3 executions of one query (= re-shuffled inside an\n"
     sb ++= "iterative loop body). `exch` = shuffle exchanges in the final plan;\n"
     sb ++= "`execs` = captured executions (iterative queries materialize per round).\n"
-    sb ++= "A traverser answered from the driver index (`LocalAdjacency`, built when a view of ≤ 2M rows is pinned) plans as one local relation: 0 exch.\n"
+    sb ++= "A traverser answered from a driver index (`LocalAdjacency`: the labeled OUT view's, read under a label mask in every direction, and the weighted SSSP view's, each built when its view is pinned at ≤ 2M rows) plans as one local relation: 0 exch.\n"
     sb ++= "The frontends lower onto the labeled OUT index when it is built: Cypher `shortestPath()`/`allShortestPaths()` pairs and paths and Gremlin `repeat(out|in|both(…)).times(n)` walks are a local relation, and only the end-label semi join, the vertex join and the query's own operators plan exchanges.\n\n"
     sb ++= s"**Red flags: ${sweepFlags.size}**"
     sb ++= (if (sweepFlags.isEmpty) " — clean.\n\n" else "\n\n" + sweepFlags.map(a =>

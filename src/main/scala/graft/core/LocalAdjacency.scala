@@ -8,12 +8,14 @@ import org.apache.spark.sql.DataFrame
   * names) for labeled views. It is the in-memory twin of a pinned edge view
   * `(src, dst[, w][, label])` — the reference's per-vertex adjacency lookups
   * (`HugeTraverser.edgesOfVertex`, `OltpTraverser`) with no Spark job per
-  * hop. Rows keep the view's multiplicity, so a non-distinct view indexes
-  * its parallel edges. The IN side of an OUT view is its [[transposed]]
-  * index, built on the driver on first use.
+  * hop. Rows keep the view's multiplicity, so parallel edges each count.
+  * The IN side of an OUT view is its [[transposed]] index, built on the
+  * driver on first use.
   *
-  * Indexes are built by [[register]] and found by [[of]], both keyed by the
-  * identity of the pinned frame; [[Pin.clear]] drops them all. */
+  * A graph has at most two: the labeled OUT view's, which every unweighted
+  * driver traverser reads under a label mask in any direction, and the
+  * weighted SSSP view's. [[register]] builds one for a pinned frame and
+  * [[of]] finds it by that frame's identity; [[Pin.clear]] drops them all. */
 final class LocalAdjacency private (
     ids: Array[String],
     index: java.util.HashMap[String, Integer],
@@ -41,9 +43,10 @@ final class LocalAdjacency private (
   def weight(e: Int): Double = weights(e)
 
   /** Per label id, whether `requested` admits it; every label when
-    * `requested` is empty. Only for a labeled view. */
+    * `requested` is empty. A null label is admitted only then, as no
+    * `label IN (…)` filter matches it. Only for a labeled view. */
   def labelMask(requested: Seq[String]): Array[Boolean] =
-    labelNames.map(l => requested.isEmpty || requested.contains(l))
+    labelNames.map(l => requested.isEmpty || l != null && requested.contains(l))
 
   /** The reversed index: every edge `dst → src`, with the same interned ids,
     * weights and labels. Each vertex's IN list is ordered by source id. */
@@ -100,19 +103,12 @@ final class LocalAdjacency private (
   def neighborSet(v: Int, dir: Direction.Value, mask: Array[Boolean]): Array[Int] = {
     val out = Array.newBuilder[Int]
     foreachEdge(v, dir, mask)(out += _)
-    out.result().sorted.distinct
-  }
-
-  /** Edges `src → dst` in the view (parallel edges each count). */
-  def multiplicity(src: String, dst: String): Int = {
-    val s = idOf(src)
-    val d = idOf(dst)
+    val a = out.result()
+    java.util.Arrays.sort(a)
     var n = 0
-    if (s >= 0 && d >= 0) {
-      var e = offsets(s)
-      while (e < offsets(s + 1)) { if (nbrs(e) == d) n += 1; e += 1 }
-    }
-    n
+    var i = 0
+    while (i < a.length) { if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }; i += 1 }
+    java.util.Arrays.copyOf(a, n)
   }
 
   /** `a + b` for non-negative counts, Long.MaxValue once it overflows. */
@@ -218,43 +214,13 @@ final class LocalAdjacency private (
       val t = cur; cur = next; next = t
     }
   }
-
-  /** First-visit BFS from `source`: runs layers 1..`maxDepth`, stopping
-    * after the first empty one, and hands each to `each(depth, layer,
-    * visited)`, where `visited` counts every vertex seen so far, the source
-    * included (also when it has no edge). `each` returning false stops. */
-  def layers(source: String, maxDepth: Int)(
-      each: (Int, Array[Int], Long) => Boolean): Unit = {
-    val seen = new java.util.BitSet(ids.length)
-    val s = idOf(source)
-    var frontier = if (s >= 0) { seen.set(s); Array(s) } else Array.emptyIntArray
-    var visited = 1L
-    var d = 0
-    var live = true
-    while (live && d < maxDepth) {
-      d += 1
-      val next = Array.newBuilder[Int]
-      for (u <- frontier) {
-        var e = offsets(u)
-        while (e < offsets(u + 1)) {
-          val v = nbrs(e)
-          if (!seen.get(v)) { seen.set(v); next += v }
-          e += 1
-        }
-      }
-      frontier = next.result()
-      visited += frontier.length
-      live = each(d, frontier, visited) && frontier.nonEmpty
-    }
-  }
 }
 
 object LocalAdjacency {
 
   /** One index per pinned view, built at most once: concurrent callers of
     * [[register]] for the same view wait on the cell's lazy build. `None`
-    * when the view holds a null endpoint, which no join would match, or a
-    * null label, which no label filter would match. */
+    * when the view holds a null endpoint, which no join would match. */
   private final class Cell(view: DataFrame) {
     lazy val index: Option[LocalAdjacency] = build(view)
   }
@@ -288,8 +254,7 @@ object LocalAdjacency {
     val rows = view.select(cols.map(org.apache.spark.sql.functions.col): _*)
       .queryExecution.executedPlan.executeCollect()
     val labelAt = cols.length - 1
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || (labeled && r.isNullAt(labelAt))))
-      return None
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val ids = new Interner
     val m = rows.length
     val src = new Array[Int](m)
@@ -315,7 +280,8 @@ object LocalAdjacency {
       val at = fill(src(k))
       nbrs(at) = dst(k)
       if (weighted) weights(at) = rows(k).getDouble(2)
-      if (labeled) labels(at) = labelIds(rows(k).getUTF8String(labelAt).toString)
+      if (labeled) labels(at) =
+        labelIds(if (rows(k).isNullAt(labelAt)) null else rows(k).getUTF8String(labelAt).toString)
       fill(src(k)) = at + 1
       k += 1
     }

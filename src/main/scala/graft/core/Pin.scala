@@ -73,10 +73,7 @@ object Pin {
     val key = (System.identityHashCode(df.sparkSession), plan.semanticHash())
     val bucket = cache.computeIfAbsent(key, _ => ListBuffer.empty)
     bucket.synchronized {
-      bucket.find(_._1.sameResult(plan)).map { hit =>
-        if (debug) System.err.println(s"[pin] HIT ${plan.nodeName} hash=${key._2}")
-        hit._2
-      }.getOrElse {
+      bucket.find(_._1.sameResult(plan)).map(_._2).getOrElse {
         // columnar persist, not localCheckpoint: checkpoint RDD storage holds
         // deserialized row OBJECTS — scanning a 27M-row pinned view that way
         // ran at ~300k rows/s/core with 25% GC (measured, ScaleSmoke 10x
@@ -92,14 +89,11 @@ object Pin {
         val cp = df.persist()
         val n = cp.count()
         rowCounts.put(cp, n)
-        if (debug) System.err.println(s"[pin] MISS ${plan.nodeName} hash=${key._2} (${cache.size} buckets)")
         bucket += ((plan, cp))
         cp
       }
     }
   }
-
-  private val debug = sys.env.get("GRAFT_PIN_DEBUG").contains("1")
 
   /** PLAN-keyed memo for derived-artifact builders (landmark indexes,
     * triangle enumerations, trained tables): dedups on `sameResult` of the

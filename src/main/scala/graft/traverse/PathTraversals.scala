@@ -36,45 +36,28 @@ object PathTraversals {
   /** All shortest (simple, vertex-distinct) paths source→target within
     * maxDepth (reference `ShortestPathTraverser.allShortestPaths:104`):
     * enumerate simple paths breadth-first, stop at the first depth where the
-    * target appears, return every path of that depth. On the driver index:
-    * BFS to that depth, recording every parent one layer up, then walk the
-    * parents back from the target — a walk of shortest length is simple. */
+    * target appears, return every path of that depth. On the labeled driver
+    * index: its BFS walks the shortest paths back from the target (a walk
+    * of shortest length is simple), one per combination of parallel edges,
+    * deduplicated as vertex sequences — the Spark loop's `distinct`. More
+    * than `bfsBroadcastMaxRows` such walks take the Spark loop. */
   def allShortestPaths(g: PropertyGraph, source: String, target: String,
                        dir: Direction.Value, labels: Seq[String] = Nil,
                        maxDepth: Int): DataFrame =
-    LocalAdjacency.of(Traversals.adjacencyView(g, dir, labels)) match {
-      case Some(ix) => localPaths(g, shortestPathsLocal(ix, source, target, maxDepth))
-      case None => allShortestPathsJoin(g, source, target, dir, labels, maxDepth)
-    }
-
-  private def shortestPathsLocal(ix: LocalAdjacency, source: String, target: String,
-                                 maxDepth: Int): Seq[Seq[String]] = {
-    val s = ix.idOf(source)
-    val t = ix.idOf(target)
-    // a simple path never returns to its source
-    if (s < 0 || t < 0 || s == t) return Nil
-    val dist = Array.fill(ix.vertexCount)(-1)
-    val parents = new java.util.HashMap[Int, List[Int]]()
-    dist(s) = 0
-    var frontier = Array(s)
-    var d = 0
-    while (dist(t) < 0 && d < maxDepth && frontier.nonEmpty) {
-      d += 1
-      val next = Array.newBuilder[Int]
-      for (u <- frontier; e <- ix.from(u) until ix.until(u)) {
-        val v = ix.nbr(e)
-        if (dist(v) < 0) { dist(v) = d; next += v; parents.put(v, u :: Nil) }
-        else if (dist(v) == d) parents.put(v, u :: parents.get(v))
+    Traversals.labeledIndex(g, labels).flatMap { case (ix, mask) =>
+      val bfs = ix.bfs(dir, mask)
+      val t = ix.idOf(target)
+      bfs.run(ix.idOf(source), maxDepth)
+      // a simple path never returns to its source (hops 0)
+      if (t < 0 || bfs.hops(t) <= 0) Some(Nil)
+      else if (bfs.pathCount(t) > Traversals.bfsBroadcastMaxRows) None
+      else {
+        val paths = Seq.newBuilder[Seq[String]]
+        bfs.foreachPath(t)(p => paths += p.toSeq.map(ix.name))
+        Some(paths.result().distinct)
       }
-      frontier = next.result()
-    }
-    val out = Seq.newBuilder[Seq[String]]
-    def back(v: Int, suffix: List[String]): Unit =
-      if (v == s) out += source :: suffix
-      else parents.get(v).foreach(u => back(u, ix.name(v) :: suffix))
-    if (dist(t) >= 0) back(t, Nil)
-    out.result()
-  }
+    }.map(localPaths(g, _))
+      .getOrElse(allShortestPathsJoin(g, source, target, dir, labels, maxDepth))
 
   /** [[allShortestPaths]]'s Spark-join loop. */
   private[graft] def allShortestPathsJoin(g: PropertyGraph, source: String, target: String,
@@ -396,34 +379,37 @@ object PathTraversals {
     * ring iff direction != BOTH or hasMultiEdges). A deeper closure can
     * never revisit the source mid-path, so the parent==target rule reduces
     * to the path-length-2 case; a 1-hop self-loop never counts in BOTH
-    * mode. On the driver index: a DFS over simple paths, the parallel-edge
-    * test reading the multiplicity view's index. */
+    * mode. On the labeled driver index: a DFS over simple paths through
+    * distinct neighbors, the parallel-edge test counting the BOTH edges
+    * between the last vertex and the source. */
   def rings(g: PropertyGraph, source: String, dir: Direction.Value,
-            labels: Seq[String] = Nil, maxDepth: Int): DataFrame = {
-    val local = LocalAdjacency.of(Traversals.adjacencyView(g, dir, labels)).flatMap { ix =>
-      if (dir != Direction.BOTH) Some(ringsLocal(ix, None, source, maxDepth))
-      else LocalAdjacency.of(Traversals.multiplicityView(g, EdgeStep(dir, labels)))
-        .map(m => ringsLocal(ix, Some(m), source, maxDepth))
+            labels: Seq[String] = Nil, maxDepth: Int): DataFrame =
+    Traversals.labeledIndex(g, labels) match {
+      case Some((ix, mask)) => localPaths(g, ringsLocal(ix, mask, dir, source, maxDepth))
+      case None => ringsJoin(g, source, dir, labels, maxDepth)
     }
-    local.map(localPaths(g, _)).getOrElse(ringsJoin(g, source, dir, labels, maxDepth))
-  }
 
-  /** `multi`: the multiplicity index of a BOTH walk, else None. */
-  private def ringsLocal(ix: LocalAdjacency, multi: Option[LocalAdjacency],
+  private def ringsLocal(ix: LocalAdjacency, mask: Array[Boolean], dir: Direction.Value,
                          source: String, maxDepth: Int): Seq[Seq[String]] = {
     val s = ix.idOf(source)
     if (s < 0 || maxDepth < 1) return Nil
     val out = Seq.newBuilder[Seq[String]]
     val path = new Array[Int](maxDepth)
     val onPath = new java.util.BitSet(ix.vertexCount)
+    // a vertex is entered once per simple path through it: its neighbor set
+    // is worked out once per walk
+    val nbrs = scala.collection.mutable.LongMap.empty[Array[Int]]
+    def parallel(v: Int): Boolean = {
+      var n = 0
+      ix.foreachEdge(v, Direction.BOTH, mask)(w => if (w == s) n += 1)
+      n >= 2
+    }
     // path(0 until k) is a simple path from the source; its edges are hop k
     def walk(k: Int): Unit = {
       val v = path(k - 1)
-      for (e <- ix.from(v) until ix.until(v)) {
-        val w = ix.nbr(e)
+      for (w <- nbrs.getOrElseUpdate(v, ix.neighborSet(v, dir, mask))) {
         if (w == s) {
-          val closes = multi.forall(m =>
-            k > 2 || k == 2 && m.multiplicity(ix.name(v), source) >= 2)
+          val closes = dir != Direction.BOTH || k > 2 || k == 2 && parallel(v)
           if (closes) out += (path.take(k) :+ s).toSeq.map(ix.name)
         } else if (k < maxDepth && !onPath.get(w)) {
           path(k) = w; onPath.set(w)

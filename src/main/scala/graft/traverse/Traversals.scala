@@ -11,18 +11,21 @@ import graft.core._
   * thread pool (`OltpTraverser.traverseIdsByBfs`, `HugeTraverser
   * .edgesOfVertex:376-440`) — a nested-loop index join. Here a traverser
   * answers in one of two regimes:
-  *  - driver index: when its edge view is pinned and at most
-  *    [[bfsBroadcastMaxRows]] rows (small enough to ship whole to every
-  *    executor), the pin also builds a [[graft.core.LocalAdjacency]] and
-  *    `kneighbor`/`koutNearest` (degree < 0), `shortestPathDist` and
-  *    `PathTraversals.allShortestPaths`/`rings`/`weightedSssp` walk it on
-  *    the driver and return a local relation — no Spark job. The labeled
-  *    OUT view's index carries per-edge labels and is transposed on the
-  *    driver for IN/BOTH; `neighbors`, `sameNeighbors(Batch)`,
-  *    `jaccardSimilarity`, `adamicAdar`/`resourceAllocation` and
-  *    `personalRank` answer from it under a label mask ([[labeledIndex]]).
-  *    The frontends read the same index without ever pinning it: Cypher
-  *    `shortestPath()`/`allShortestPaths()` (`CypherLite.shortestPairs`,
+  *  - driver index: a graph has one unweighted
+  *    [[graft.core.LocalAdjacency]], built when its labeled OUT view is
+  *    pinned and at most [[bfsBroadcastMaxRows]] rows (small enough to ship
+  *    whole to every executor). It carries parallel edges and per-edge
+  *    labels, and its driver-side transpose serves IN and BOTH, so every
+  *    (dir, labels) answers from it under a label mask ([[labeledIndex]]):
+  *    `kneighbor`/`koutNearest` (degree < 0), `shortestPathDist`,
+  *    `PathTraversals.allShortestPaths`/`rings`, `neighbors`,
+  *    `sameNeighbors(Batch)`, `jaccardSimilarity`,
+  *    `adamicAdar`/`resourceAllocation` and `personalRank` walk it on the
+  *    driver and return a local relation — no Spark job. The weighted SSSP
+  *    view has its own index (`PathTraversals.weightedSssp`). The distinct
+  *    and multiplicity views stay Spark pins for the join loops and carry
+  *    no index. The frontends read the labeled index without ever pinning
+  *    it: Cypher `shortestPath()`/`allShortestPaths()` (`CypherLite.shortestPairs`,
   *    `allShortestPathRows`) and Gremlin `repeat(<one hop>).times(n)`
   *    (`GraphTraversal.repeatStep`) walk it from at most
   *    [[frontierPushdownMaxIds]] start ids ([[smallIdSet]], one job), as
@@ -152,16 +155,18 @@ object Traversals {
     * replaces a cold two-sided shuffle — the assortativity tier flip. All
     * call sites must route through here: the pin dedups by plan, and a
     * bare un-partitioned construction would cold-pin a second copy of the
-    * edge table. */
+    * edge table. A Spark pin only: the driver traversers read the same
+    * edges, with their multiplicity, from [[labeledIndex]]. */
   private[graft] def multiplicityView(g: PropertyGraph, step: EdgeStep): DataFrame =
-    indexed(pinned(step.edgesFor(g).select(col("src"), col("dst"))
-      .repartition(col("src"))))
+    pinned(step.edgesFor(g).select(col("src"), col("dst"))
+      .repartition(col("src")))
 
   /** Labeled adjacency (src, label, dst) pinned per (dir, labels) — the
     * base relation per-hop degree truncation windows over. Clustered by src
     * within partitions for the same cache-batch pruning as adjacencyView.
-    * Only the OUT view of every label is indexed: its transpose serves IN
-    * and BOTH, so the twice-as-large BOTH view is never collected. */
+    * Only the OUT view of every label is indexed — the graph's one
+    * unweighted driver index: its transpose serves IN and BOTH, so the
+    * twice-as-large BOTH view is never collected. */
   private[graft] def labeledAdjacency(g: PropertyGraph, dir: Direction.Value,
                                       labels: Seq[String]): DataFrame = {
     val view = pinned(labeledPlan(g, dir, labels))
@@ -265,7 +270,9 @@ object Traversals {
   /** Builds the driver-side [[LocalAdjacency]] of a view that is pinned and
     * at most [[bfsBroadcastMaxRows]] rows — the bound under which the view
     * already counts as small enough to ship whole to every executor.
-    * Returns the view. */
+    * Returns the view. Two views call it: the labeled OUT view
+    * ([[labeledAdjacency]]) and the weighted SSSP view
+    * (`PathTraversals.weightedEdgeView`). */
   private[graft] def indexed(view: DataFrame): DataFrame = {
     if (Pin.rowsOf(view).exists(_ <= bfsBroadcastMaxRows)) LocalAdjacency.register(view)
     view
@@ -281,9 +288,10 @@ object Traversals {
 
   /** THE shared distinct adjacency view for (dir, labels) — pinned once per
     * session (the Bench warmup pre-materializes the label-free OUT/BOTH
-    * instances). All set-semantics traversals build their edge view through
-    * here: the plans must stay `sameResult`-equal across queries for the
-    * pin to be shared. Deliberately NOT pre-partitioned by src: OLTP
+    * instances). All set-semantics Spark loops build their edge view
+    * through here: the plans must stay `sameResult`-equal across queries
+    * for the pin to be shared. A Spark pin only: the driver traversers read
+    * [[labeledIndex]] instead. Deliberately NOT pre-partitioned by src: OLTP
     * frontiers are small, and AQE's runtime broadcast of the frontier beats
     * a sort-merge join that a declared edge partitioning would bias the
     * planner toward (measured: pre-partitioning regressed every BFS query;
@@ -291,7 +299,7 @@ object Traversals {
     * weighted SSSP — pin their own src-partitioned views instead). */
   private[graft] def adjacencyView(g: PropertyGraph, dir: Direction.Value,
                                    labels: Seq[String] = Nil): DataFrame =
-    indexed(pinned(EdgeStep(dir, labels).edgesFor(g)
+    pinned(EdgeStep(dir, labels).edgesFor(g)
       .select(col("src"), col("dst")).distinct()
       // clustered by src WITHIN each hash partition: the columnar cache keeps
       // per-batch min/max stats, so a frontier pushed down as `src IN (...)`
@@ -300,7 +308,7 @@ object Traversals {
       // order = owner vertex id, BinarySerializer edge keys) re-expressed as
       // cache-batch pruning. Sort order alone declares no outputPartitioning,
       // so the planner keeps broadcasting frontiers (no SMJ bias).
-      .sortWithinPartitions(col("src"))))
+      .sortWithinPartitions(col("src")))
 
   /** Thrown when a traversal touches more elements than its capacity guard
     * allows (reference `Query.DEFAULT_CAPACITY` = 800 000,
@@ -316,7 +324,7 @@ object Traversals {
   private final case class Layers(frontier: DataFrame, reached: DataFrame)
 
   /** THE Spark layer loop of the kneighbor/kout family, the Spark twin of
-    * [[LocalAdjacency.layers]]: layer d is the distinct ids `step(d)`
+    * [[LocalAdjacency.bfs]]: layer d is the distinct ids `step(d)`
     * expands the previous layer to; with `nearest` they are anti-joined
     * against everything reached so far (first visit), otherwise the walk
     * keeps re-reached vertices. Per layer:
@@ -359,12 +367,29 @@ object Traversals {
     Layers(frontier, reached)
   }
 
-  /** The driver index of the (dir, labels) adjacency, for the kneighbor/kout
-    * family: only the uncapped walk (degree < 0) reads it; the degree cap
-    * keeps its labeled-adjacency join. */
-  private def uncappedIndex(g: PropertyGraph, dir: Direction.Value,
-                            labels: Seq[String], degree: Long): Option[LocalAdjacency] =
-    if (degree < 0L) LocalAdjacency.of(adjacencyView(g, dir, labels)) else None
+  /** The first-visit BFS of `source` on the labeled index: every vertex it
+    * reaches within `depth` hops, with its hops. Only the uncapped walk
+    * (degree < 0) reads the index; the degree cap keeps its labeled-adjacency
+    * join. The capacity guard is [[layerLoop]]'s: after each layer up to the
+    * first empty one, it counts the source and every vertex reached so far. */
+  private def nearestLocal(g: PropertyGraph, source: String, dir: Direction.Value,
+                           labels: Seq[String], depth: Int, degree: Long,
+                           capacity: Long): Option[Seq[(String, Int)]] =
+    (if (degree < 0L) labeledIndex(g, labels) else None).map { case (ix, mask) =>
+      val bfs = ix.bfs(dir, mask)
+      val reached = bfs.run(ix.idOf(source), depth).toSeq.map(v => (ix.name(v), bfs.hops(v)))
+      var visited = 1L
+      var d = 0
+      var live = capacity >= 0L
+      while (live && d < depth) {
+        d += 1
+        val layer = reached.count(_._2 == d)
+        visited += layer
+        checkCapacity(visited, capacity)
+        live = layer > 0
+      }
+      reached
+    }
 
   /** k-neighbor: all vertices within ≤ maxDepth hops of source, excluding
     * the source itself (reference `KneighborTraverser.kneighbor:39`,
@@ -374,15 +399,8 @@ object Traversals {
   def kneighbor(g: PropertyGraph, source: String, dir: Direction.Value,
                 labels: Seq[String] = Nil, maxDepth: Int, degree: Long = -1L,
                 capacity: Long = -1L): DataFrame =
-    uncappedIndex(g, dir, labels, degree) match {
-      case Some(ix) =>
-        val out = Seq.newBuilder[String]
-        ix.layers(source, maxDepth) { (_, layer, visited) =>
-          checkCapacity(visited, capacity)
-          layer.foreach(v => out += ix.name(v))
-          true
-        }
-        localIds(g, out.result())
+    nearestLocal(g, source, dir, labels, maxDepth, degree, capacity) match {
+      case Some(reached) => localIds(g, reached.map(_._1))
       case None => kneighborJoin(g, source, dir, labels, maxDepth, degree, capacity)
     }
 
@@ -402,15 +420,9 @@ object Traversals {
   def koutNearest(g: PropertyGraph, source: String, dir: Direction.Value,
                   labels: Seq[String] = Nil, depth: Int,
                   degree: Long = -1L, capacity: Long = -1L): DataFrame =
-    uncappedIndex(g, dir, labels, degree) match {
-      case Some(ix) =>
-        var last = Seq(source) // depth ≤ 0 answers the source itself
-        ix.layers(source, depth) { (_, layer, visited) =>
-          checkCapacity(visited, capacity)
-          last = layer.toSeq.map(ix.name)
-          true
-        }
-        localIds(g, last)
+    nearestLocal(g, source, dir, labels, depth, degree, capacity) match {
+      case Some(reached) => // depth ≤ 0 answers the source itself
+        localIds(g, if (depth <= 0) Seq(source) else reached.filter(_._2 == depth).map(_._1))
       case None => koutNearestJoin(g, source, dir, labels, depth, degree, capacity)
     }
 
@@ -741,17 +753,15 @@ object Traversals {
     val spark = g.vertices.sparkSession
     import spark.implicits._
     if (source == target) return Seq(0L).toDF("dist")
-    LocalAdjacency.of(adjacencyView(g, dir, labels)) match {
-      case Some(ix) =>
-        // plain BFS: the first layer holding the target is the distance the
+    labeledIndex(g, labels) match {
+      case Some((ix, mask)) =>
+        // plain BFS: the hops of the target are the distance the
         // bidirectional meet finds
+        val bfs = ix.bfs(dir, mask)
         val t = ix.idOf(target)
-        var found = -1L
-        if (t >= 0) ix.layers(source, maxDepth) { (d, layer, _) =>
-          if (layer.contains(t)) found = d
-          found < 0
-        }
-        if (found >= 0) Seq(found).toDF("dist") else Seq.empty[Long].toDF("dist")
+        if (t >= 0) bfs.run(ix.idOf(source), maxDepth)
+        if (t >= 0 && bfs.hops(t) > 0) Seq(bfs.hops(t).toLong).toDF("dist")
+        else Seq.empty[Long].toDF("dist")
       case None => shortestPathDistJoin(g, source, target, dir, labels, maxDepth)
     }
   }

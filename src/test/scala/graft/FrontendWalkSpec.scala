@@ -3,7 +3,7 @@ package graft
 import graft.api.{CypherLite, Graft, GraphTraversal, GremlinLite}
 import graft.core._
 import graft.traverse.Traversals
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
@@ -21,37 +21,8 @@ class FrontendWalkSpec extends SparkSpec {
 
   private val dirs = Seq(Direction.OUT, Direction.IN, Direction.BOTH)
 
-  private val schema = GraphSchema(Nil,
-    Seq(VertexLabelDef("p", Nil), VertexLabelDef("q", Nil)),
-    Seq(EdgeLabelDef("a", "p", "q"), EdgeLabelDef("b", "p", "q")))
-
-  private val genShape: Gen[Shape] = for {
-    n <- Gen.choose(2, 8)
-    vs = (0 until n).map(i => s"v$i")
-    label = Gen.oneOf("a", "b")
-    random <- Gen.listOfN(n + 2, Gen.zip(Gen.oneOf(vs), Gen.oneOf(vs), label))
-    loops <- Gen.listOfN(2, Gen.zip(Gen.oneOf(vs), label)).map(_.map(l => (l._1, l._1, l._2)))
-    parallel <- Gen.someOf(random)
-    hub <- Gen.oneOf(vs)
-    spokes <- Gen.someOf(vs)
-    chain <- Gen.choose(0, 5)
-  } yield {
-    val cs = (0 to chain).map(i => s"c$i")
-    val chainEdges = cs.zip(cs.tail).map { case (s, d) => (s, d, "b") }
-    val toChain = if (chain > 0) Seq((vs.head, cs.head, "a")) else Nil
-    Shape((vs ++ cs :+ "iso").zipWithIndex.map { case (v, i) => (v, if (i % 2 == 0) "p" else "q") },
-      random ++ loops ++ parallel ++ spokes.map(s => (hub, s, "a")) ++ chainEdges ++ toChain)
-  }
-
-  /** The graph of a shape, with its labeled OUT view pinned, so the driver
-    * index is built. */
-  private def graph(s: Shape): PropertyGraph = {
-    val g = PropertyGraph(s.vertices.toDF("id", "label"),
-      s.edges.toDF("src", "dst", "label").withColumn("sort_values", lit(null).cast("string")),
-      schema)
-    Traversals.labeledAdjacency(g, Direction.OUT, Nil)
-    g
-  }
+  /** [[FrontendWalkSpec.graph]] in this suite's session. */
+  private def graph(s: Shape): PropertyGraph = FrontendWalkSpec.graph(spark, s)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map {
@@ -202,6 +173,41 @@ class FrontendWalkSpec extends SparkSpec {
 object FrontendWalkSpec {
   /** Vertices with their labels and labeled edges (parallel edges repeat). */
   final case class Shape(vertices: Seq[(String, String)], edges: Seq[(String, String, String)])
+
+  private val schema = GraphSchema(Nil,
+    Seq(VertexLabelDef("p", Nil), VertexLabelDef("q", Nil)),
+    Seq(EdgeLabelDef("a", "p", "q"), EdgeLabelDef("b", "p", "q")))
+
+  /** Small labeled multigraphs: random edges, self-loops, parallel edges,
+    * a hub, a chain and an isolated vertex `iso`; edge labels `a` and `b`. */
+  val genShape: Gen[Shape] = for {
+    n <- Gen.choose(2, 8)
+    vs = (0 until n).map(i => s"v$i")
+    label = Gen.oneOf("a", "b")
+    random <- Gen.listOfN(n + 2, Gen.zip(Gen.oneOf(vs), Gen.oneOf(vs), label))
+    loops <- Gen.listOfN(2, Gen.zip(Gen.oneOf(vs), label)).map(_.map(l => (l._1, l._1, l._2)))
+    parallel <- Gen.someOf(random)
+    hub <- Gen.oneOf(vs)
+    spokes <- Gen.someOf(vs)
+    chain <- Gen.choose(0, 5)
+  } yield {
+    val cs = (0 to chain).map(i => s"c$i")
+    val chainEdges = cs.zip(cs.tail).map { case (s, d) => (s, d, "b") }
+    val toChain = if (chain > 0) Seq((vs.head, cs.head, "a")) else Nil
+    Shape((vs ++ cs :+ "iso").zipWithIndex.map { case (v, i) => (v, if (i % 2 == 0) "p" else "q") },
+      random ++ loops ++ parallel ++ spokes.map(s => (hub, s, "a")) ++ chainEdges ++ toChain)
+  }
+
+  /** The graph of a shape, with its labeled OUT view pinned, so the driver
+    * index is built. */
+  def graph(spark: SparkSession, s: Shape): PropertyGraph = {
+    import spark.implicits._
+    val g = PropertyGraph(s.vertices.toDF("id", "label"),
+      s.edges.toDF("src", "dst", "label").withColumn("sort_values", lit(null).cast("string")),
+      schema)
+    Traversals.labeledAdjacency(g, Direction.OUT, Nil)
+    g
+  }
 
   /** One generated case: a graph and the parameters every lowering reads. */
   final case class Case(shape: Shape, dir: Direction.Value, labels: Seq[String],

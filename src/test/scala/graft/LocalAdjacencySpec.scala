@@ -6,6 +6,8 @@ import graft.traverse.Traversals.CapacityExceededException
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 /** Differential spec of the driver-index regime: each traverser that
   * answers from a [[LocalAdjacency]] must return exactly what its Spark
@@ -79,13 +81,12 @@ class LocalAdjacencySpec extends SparkSpec {
       PathTraversals.weightedSsspJoin(g, s, dir, labels, weight, rounds))
 
   /** Targets of some walk of exactly `depth` steps, source excluded, walked
-    * on the index of the (dir, labels) view. */
+    * on the labeled index under the mask of `labels`. */
   private def walk(g: PropertyGraph, s: String, dir: Direction.Value,
                    labels: Seq[String], depth: Int): Seq[String] = {
-    val ix = LocalAdjacency.of(Traversals.adjacencyView(g, dir, labels)).get
+    val (ix, mask) = Traversals.labeledIndex(g, labels).get
     var layer = Set(ix.idOf(s)).filter(_ >= 0)
-    for (_ <- 1 to depth)
-      layer = layer.flatMap(v => (ix.from(v) until ix.until(v)).map(ix.nbr))
+    for (_ <- 1 to depth) layer = layer.flatMap(v => ix.neighborSet(v, dir, mask))
     (layer.map(ix.name) - s).toSeq.sorted
   }
 
@@ -172,31 +173,38 @@ class LocalAdjacencySpec extends SparkSpec {
       }
   }
 
-  test("both regimes run: the pinned views carry an index, Pin.clear drops it") {
-    val view = Traversals.adjacencyView(modern, Direction.OUT)
+  test("both regimes run: the labeled OUT view has an index, Pin.clear drops it") {
+    val view = Traversals.labeledAdjacency(modern, Direction.OUT, Nil)
     val ix = LocalAdjacency.of(view)
     assert(ix.isDefined && ix.get.edgeCount === 6 && ix.get.vertexCount === 6)
-    assert(LocalAdjacency.of(Traversals.multiplicityView(modern, EdgeStep(Direction.BOTH)))
-      .exists(_.edgeCount === 12))
+    // BOTH reads the OUT edges and the transpose's: every edge twice
+    val all = ix.get.labelMask(Nil)
+    assert((0 until 6).map(ix.get.degree(_, Direction.BOTH, all)).sum === 12)
+    assert(Traversals.labeledIndex(modern, Nil).exists(_._1 eq ix.get))
     assert(LocalAdjacency.of(PathTraversals.weightedEdgeView(modern, Direction.OUT, Nil,
       "weight")).isDefined)
+    // the distinct and multiplicity views are Spark pins with no index
+    for (dir <- dirs) {
+      assert(LocalAdjacency.of(Traversals.adjacencyView(modern, dir)).isEmpty)
+      assert(LocalAdjacency.of(Traversals.multiplicityView(modern, EdgeStep(dir))).isEmpty)
+    }
     // an unpinned frame (SPARK_GRAFT_NOPIN / BUCKETED mode) gets none
-    val bare = modern.edges.select(col("src"), col("dst"))
+    val bare = modern.edges.select(col("src"), col("label"), col("dst"))
     assert(LocalAdjacency.of(Traversals.indexed(bare)).isEmpty)
     Pin.clear()
     assert(LocalAdjacency.of(view).isEmpty)
     // the next pin is a new frame with an index of its own
-    val again = Traversals.adjacencyView(modern, Direction.OUT)
+    val again = Traversals.labeledAdjacency(modern, Direction.OUT, Nil)
     assert(!(again eq view) && LocalAdjacency.of(again).isDefined)
   }
 
-  test("concurrent first pins build one index per view") {
+  test("concurrent first pins build one labeled index") {
     val g = modern.copy(edges = modern.edges.filter(col("label") === "knows"))
     val start = new java.util.concurrent.CountDownLatch(1)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[LocalAdjacency]()
     val threads = (1 to 4).map(_ => new Thread(() => {
       start.await()
-      LocalAdjacency.of(Traversals.adjacencyView(g, Direction.BOTH)).foreach(got.add)
+      Traversals.labeledIndex(g, Nil).foreach(ixm => got.add(ixm._1))
     }))
     threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
     assert(got.size === 4)
@@ -419,10 +427,11 @@ class LocalAdjacencySpec extends SparkSpec {
     val g = TpchGraph.cached(spark, "/root/testdata/sf0.01")
     val s = g.degrees(Direction.BOTH).orderBy(col("degree").desc, col("id"))
       .head().getString(0)
-    val ix = LocalAdjacency.of(Traversals.adjacencyView(g, Direction.BOTH)).get
-    val sizes = Seq.newBuilder[(Int, Long)] // (layer size, visited so far)
-    ix.layers(s, 4) { (_, layer, visited) => sizes += ((layer.length, visited)); true }
-    val layers = sizes.result()
+    val (ix, all) = Traversals.labeledIndex(g, Nil).get
+    val bfs = ix.bfs(Direction.BOTH, all)
+    val hops = bfs.run(ix.idOf(s), 4).map(bfs.hops)
+    // (layer size, visited so far) per layer
+    val layers = (1 to 4).map(d => (hops.count(_ == d), 1L + hops.count(_ <= d)))
     // the first layer over the pushdown bound; the next one expands by join
     val wide = layers.indexWhere(_._1 > Traversals.frontierPushdownMaxIds) + 1
     assert(wide >= 1 && wide < 4, s"$s layers $layers")
@@ -432,5 +441,56 @@ class LocalAdjacencySpec extends SparkSpec {
     loopModes(g, s, Direction.BOTH, Nil, depth)
     // the capacity guard trips at the wide layer, with the same count
     kneighbor(g, s, Direction.BOTH, Nil, depth, capacity = layers(wide - 1)._2 - 1)
+  }
+
+  test("a null label keeps the index: only the empty label list admits it") {
+    // marko→josh loses its label: no label filter keeps that edge
+    val g = modern.copy(edges = modern.edges.withColumn("label",
+      when(col("src") === "person:marko" && col("dst") === "person:josh", lit(null))
+        .otherwise(col("label"))))
+    Traversals.labeledAdjacency(g, Direction.OUT, Nil)
+    assert(Traversals.labeledIndex(g, Nil).isDefined)
+    for (dir <- dirs; labels <- Seq(Nil, Seq("knows"), Seq("knows", "created"));
+         s <- Seq("person:marko", "person:josh")) {
+      kneighbor(g, s, dir, labels, 2)
+      same(s"neighbors $s $dir $labels")(Traversals.neighbors(g, s, dir, labels))(
+        Traversals.neighborsJoin(g, s, dir, labels))
+      rings(g, s, dir, labels, 3)
+    }
+    assert(ids(Traversals.kneighbor(g, "person:marko", Direction.OUT, Nil, 1)) ===
+      Set("person:vadas", "person:josh", "software:lop"))
+    assert(ids(Traversals.kneighbor(g, "person:marko", Direction.OUT, Seq("knows"), 1)) ===
+      Set("person:vadas"))
+  }
+
+  test("generated multigraphs: the five BFS and path readers equal their Spark twins") {
+    val seen = scala.collection.mutable.Set.empty[String]
+    val genCase = for {
+      shape <- FrontendWalkSpec.genShape
+      dir <- Gen.oneOf(dirs)
+      labels <- Gen.oneOf(Seq(Nil, Seq("a"), Seq("b"), Seq("a", "b"), Seq("nolabel")))
+      depth <- Gen.choose(0, 4)
+      capacity <- Gen.oneOf(0L, 2L, 4L, 8L)
+      v = Gen.frequency(1 -> Gen.const("nobody"), 4 -> Gen.oneOf(shape.vertices.map(_._1)))
+      s <- v
+      t <- v
+    } yield (shape, dir, labels, depth, capacity, s, t)
+    val prop = Prop.forAllNoShrink(genCase) { case (shape, dir, labels, depth, capacity, s, t) =>
+      val g = FrontendWalkSpec.graph(spark, shape)
+      seen ++= Seq(dir.toString, labels.mkString("+"), if (s == "nobody") "nobody" else "known")
+      kneighbor(g, s, dir, labels, depth)
+      kneighbor(g, s, dir, labels, depth, capacity)
+      koutNearest(g, s, dir, labels, depth)
+      koutNearest(g, s, dir, labels, depth, capacity)
+      shortestPath(g, s, t, dir, labels, depth)
+      allShortestPaths(g, s, t, dir, labels, depth)
+      rings(g, s, dir, labels, depth)
+      true
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(20)
+      .withInitialSeed(Seed(11L)).withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    // the fixed seed covers every direction, an unknown label and source
+    assert(Seq("OUT", "IN", "BOTH", "nolabel", "nobody", "known").forall(seen), seen)
   }
 }
